@@ -79,13 +79,15 @@ def write_explains(names: list[str], when: str) -> None:
 
 
 def run_audio(reps: int = 1) -> dict:
+    if reps < 1:
+        return {"n_clips": 0, "runs": []}
     import bench as B
 
     spark = _spark()
     out = []
     corpus_dir = os.environ.get("SPARK_GRAFT_CORPUS")
     n = 0
-    for _ in range(max(1, reps)):
+    for _ in range(reps):
         n, wall, stages, corpus_dir = B.run_audio_dedup(spark, corpus_dir)
         out.append({"wall": round(wall, 3), "stages": stages})
     return {"n_clips": n, "runs": out}

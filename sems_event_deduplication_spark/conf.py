@@ -172,11 +172,10 @@ class DedupConfig:
     # --- candidate-join scale controls ------------------------------
     max_bucket_size: int = 256    # LSH buckets larger than this use star-edges
                                   # (member -> bucket-min) instead of all-pairs
-    salt_buckets: int = 16        # salt fan-out used to spread verify work
-    containment_bands: int = 2    # bands scanned by the suffix-array tier
+    containment_bands: int = 2    # bands scanned by the native containment
+                                  # tier (verify.containment_pairs)
 
     # --- clustering ------------------------------------------------
-    min_cluster_size: int = 2     # reference community_detection min size (cluster_news.py:22)
     cc_max_iterations: int = 25   # large-star/small-star fixpoint cap
     cc_local_edges: int = 2_000_000
                                   # <= this many distinct dedup edges:

@@ -30,26 +30,6 @@ def dedup_keep_last(
     )
 
 
-def exact_dedup_by_content(
-    df: DataFrame,
-    text_col: str = "transcript_norm",
-    payload_col: str | None = "bytes",
-    order_col: str = "clip_id",
-    algo: str = "xxh128",
-) -> DataFrame:
-    """Content-hash exact dedup: cheap cardinality cut before LSH.
-
-    Mirrors the reference's "dedup before the expensive stage" ordering
-    (``create_silver_label.py:67`` before ``:76``), keyed on digests so
-    binary payloads don't ride the shuffle. Digest algo notes:
-    ``exact_dedup_digest_keys``.
-    """
-    key_names, digests = exact_dedup_digest_keys(text_col, payload_col, algo)
-    with_keys = df.select("*", *digests)
-    out = dedup_keep_last(with_keys, key_names, order_col)
-    return out.drop(*key_names)
-
-
 def digest_rank_edges(
     narrow: DataFrame,
     key_names: list[str],

@@ -16,10 +16,9 @@ Scale design (the part that must survive 10¹² rows):
   — O(m) output that still connects the component for CC. This is the
   salting-adjacent cap: correctness of *clusters* is preserved because
   edges only need to connect, not enumerate.
-- AQE skew-join splitting stays on as the second line of defense, and
-  the verify stage repartitions by a salted key
-  (``pmod(xxhash64(id_a), salt_buckets)``) to spread hot verification
-  work.
+- AQE skew-join splitting stays on as the second line of defense: hot
+  verify keys (one doc in many pairs) are split by the skew join, with
+  no salt repartition before verification.
 - Pairs are deduped across bands with a groupBy on (id_a, id_b) —
   map-side partial aggregation collapses most duplicates before the
   shuffle.
@@ -159,7 +158,3 @@ def bucket_stats(banded: DataFrame, max_bucket_size: int = 256) -> DataFrame:
         ).cast("long").alias("n_pairs_not_enumerated"),
     )
 
-
-def salted(df: DataFrame, key_col: str, salt_buckets: int) -> DataFrame:
-    """Append a deterministic salt column for repartitioning hot keys."""
-    return df.withColumn("__salt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(salt_buckets)))

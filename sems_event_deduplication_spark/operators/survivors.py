@@ -1,4 +1,4 @@
-"""Survivor selection + cluster gating (SURVEY.md W3/W6, G6).
+"""Survivor selection + cluster summaries (SURVEY.md W3/W6, G6).
 
 Reference: cluster head = first member of the merged list
 (``create_silver_label.py:408`` — order-dependent). Here the canonical
@@ -11,21 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def min_cluster_size_gate(
-    df: DataFrame, cluster_col: str = "component", min_size: int = 2
-) -> DataFrame:
-    """community_detection's min_community_size (cluster_news.py:22) as
-    a count window; rows in smaller clusters keep cluster = own id
-    (i.e., are treated as singletons) rather than being dropped."""
-    w = Window.partitionBy(cluster_col)
-    return df.withColumn("__csize", F.count(F.lit(1)).over(w)).withColumn(
-        cluster_col,
-        F.when(F.col("__csize") >= min_size, F.col(cluster_col)).otherwise(
-            F.col("clip_id")
-        ),
-    ).drop("__csize")
 
 
 def select_survivors(

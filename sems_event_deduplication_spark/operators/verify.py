@@ -9,10 +9,11 @@ Three verify tiers, cheapest first:
    arrays, native exprs (J3). The reference's verify analogue is
    all-pairs cosine >= t inside ``community_detection``
    (``cluster_news.py:36-38``).
-3. **Suffix-array substring containment** — per-bucket grouped
-   ``applyInPandas``: catches short-transcript-contained-in-long dups
-   that Jaccard misses (north-rule requirement). Runs per LSH bucket
-   (bounded by max_bucket_size) so each group is small.
+3. **Substring containment** — native ``contains`` over every pair
+   inside each small LSH bucket of the first few bands: catches
+   short-transcript-contained-in-long dups that Jaccard misses. No
+   Python worker pass; the bucket cap (max_bucket_size) bounds the
+   pairs per bucket.
 
 Audio tier: Hamming distance on SimHash via native ``bit_count(a^b)``.
 
@@ -23,12 +24,11 @@ needed columns first so the payload (``bytes``) never moves.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.minhash import estimated_jaccard, exact_jaccard
+from . import lsh
 
 
 def attach_pair_sides(
@@ -114,137 +114,6 @@ def verify_hamming(
     )
 
 
-_CONTAIN_SCHEMA = "id_a string, id_b string, contained int"
-
-
-def _suffix_array(s: str) -> list[int]:
-    """Suffix array (sorted suffix start offsets) by numpy
-    rank-doubling: O(n log² n) comparisons of O(1) integer pairs.
-
-    The previous slice-key ``sorted`` did O(n) character work per
-    comparison — O(n² log n) worst case on repetitive text (exactly the
-    boilerplate shape dedup corpora are full of). Buckets are bounded
-    (``max_bucket_size`` docs), so the point remains the *distribution*
-    (one array per bucket, never global); this just makes pathological
-    buckets linear-ish instead of quadratic.
-    """
-    n = len(s)
-    if n == 0:
-        return []
-    if n == 1:
-        return [0]
-    # codepoint ranks (utf-32-le = one uint32 per character)
-    rank = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-    k = 1
-    while True:
-        key2 = np.full(n, -1, dtype=np.int64)
-        key2[: n - k] = rank[k:]
-        order = np.lexsort((key2, rank))
-        r_sorted = rank[order]
-        k_sorted = key2[order]
-        neq = np.ones(n, dtype=bool)
-        neq[1:] = (r_sorted[1:] != r_sorted[:-1]) | (k_sorted[1:] != k_sorted[:-1])
-        new_rank = np.empty(n, dtype=np.int64)
-        new_rank[order] = np.cumsum(neq) - 1
-        rank = new_rank
-        if rank[order[-1]] == n - 1:  # all ranks distinct -> done
-            return order.tolist()
-        k *= 2
-
-
-def _contained_pairs_in_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Within one LSH bucket: find (short ⊂ long) containment pairs.
-
-    Builds a suffix array over the '\\x00'-joined corpus of the bucket,
-    then for each document binary-searches its full text; a hit whose
-    offset lies inside a *different* document is a containment dup.
-    """
-    ids = pdf["clip_id"].tolist()
-    texts = pdf["text"].tolist()
-    n = len(ids)
-    if n < 2:
-        return pd.DataFrame(columns=["id_a", "id_b", "contained"]).astype(
-            {"id_a": str, "id_b": str, "contained": int}
-        )
-    sep = "\x00"
-    corpus = sep.join(texts)
-    # offset -> document index
-    doc_starts = np.zeros(n, dtype=np.int64)
-    pos = 0
-    for i, t in enumerate(texts):
-        doc_starts[i] = pos
-        pos += len(t) + 1
-    sa = _suffix_array(corpus)
-    out = set()
-
-    def doc_of(off: int) -> int:
-        return int(np.searchsorted(doc_starts, off, side="right") - 1)
-
-    for i, t in enumerate(texts):
-        if not t:
-            continue
-        # binary search the suffix array for suffixes starting with t
-        lo, hi = 0, len(sa)
-        while lo < hi:
-            mid = (lo + hi) // 2
-            if corpus[sa[mid] : sa[mid] + len(t)] < t:
-                lo = mid + 1
-            else:
-                hi = mid
-        j = lo
-        while j < len(sa) and corpus[sa[j] : sa[j] + len(t)] == t:
-            d = doc_of(sa[j])
-            if d != i:
-                pair = (ids[i], ids[d]) if ids[i] < ids[d] else (ids[d], ids[i])
-                out.add(pair)
-            j += 1
-    rows = [{"id_a": a, "id_b": b, "contained": 1} for a, b in sorted(out)]
-    return pd.DataFrame(rows, columns=["id_a", "id_b", "contained"])
-
-
-def _containment_scanner(max_bucket_size: int):
-    """mapInPandas function: per-partition suffix-array containment.
-
-    The input is repartitioned by (band_id, band_hash) and sorted within
-    partitions, so each bucket is contiguous; one Python call handles an
-    entire Arrow batch of buckets (an ``applyInPandas`` per-bucket
-    grouping paid ~ms of UDF dispatch per bucket — at ~10^5 buckets that
-    was the dominant verify cost). Buckets can straddle Arrow batch
-    boundaries, so the scanner carries the trailing open bucket over to
-    the next batch and flushes it at end of partition.
-    """
-
-    def scan(batches):
-        carry: pd.DataFrame | None = None
-
-        def process(pdf: pd.DataFrame):
-            outs = []
-            for _, grp in pdf.groupby(["band_id", "band_hash"], sort=False):
-                if 1 < len(grp) <= max_bucket_size:
-                    outs.append(_contained_pairs_in_group(grp))
-            return outs
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            # hold back the last (possibly incomplete) bucket
-            last_key = (pdf["band_id"].iloc[-1], pdf["band_hash"].iloc[-1])
-            is_last = (pdf["band_id"] == last_key[0]) & (pdf["band_hash"] == last_key[1])
-            carry = pdf[is_last]
-            done = pdf[~is_last]
-            for out in process(done):
-                if len(out):
-                    yield out
-        if carry is not None and len(carry):
-            for out in process(carry):
-                if len(out):
-                    yield out
-
-    return scan
-
-
 def containment_pairs(
     banded: DataFrame,
     docs: DataFrame,
@@ -253,48 +122,37 @@ def containment_pairs(
     text_col: str = "transcript_norm",
     n_bands: int = 2,
 ) -> DataFrame:
-    """Suffix-array containment verify over bucket-sorted partitions.
+    """Substring containment verify over small LSH buckets, all native.
 
-    Input ``banded`` = (clip_id, band_id, band_hash). Buckets above
-    max_bucket_size are skipped (same cap as candidate generation).
+    Input ``banded`` = (clip_id, band_id, band_hash), raw or already
+    ``lsh.size_buckets``-ed (a persisted sized frame is reused as-is).
     Only the first ``n_bands`` bands are scanned: near-identical docs
     collide on (almost) every band, so scanning all bands re-finds the
-    same pairs b times. Returns distinct (id_a, id_b, contained=1).
-    """
-    # JVM-side bucket-size pre-filter BEFORE the text join: oversized
-    # (boilerplate mega-) buckets and singletons never ship their
-    # transcripts into Python. Without this, a hot bucket spanning many
-    # Arrow batches is repeatedly pd.concat-copied through the scanner's
-    # carry just to be discarded by the size check — the exact skew
-    # blowup the star-edge cap in lsh.candidate_pairs guards against.
-    # A persisted lsh.size_buckets frame is reused as-is (no window).
-    if "__bucket_n" in banded.columns:
-        sized = (
-            banded.filter(F.col("band_id") < n_bands)
-            .filter(
-                (F.col("__bucket_n") > 1)
-                & (F.col("__bucket_n") <= max_bucket_size)
-            )
-            .select("clip_id", "band_id", "band_hash")
-        )
-    else:
-        from pyspark.sql import Window
+    same pairs b times. Buckets of one member or above
+    ``max_bucket_size`` are sliced off BEFORE pair expansion and the
+    text join, so boilerplate mega-buckets never ship transcripts.
+    Every pair inside each remaining bucket (``lsh.candidate_pairs``
+    on the slice: once per pair, no star edges) is kept iff one
+    non-empty text is a substring of the other. Returns distinct
+    (id_a, id_b, contained=1) with id_a < id_b.
 
-        wb = Window.partitionBy("band_id", "band_hash")
-        sized = (
-            banded.filter(F.col("band_id") < n_bands)
-            .withColumn("__n", F.count(F.lit(1)).over(wb))
-            .filter((F.col("__n") > 1) & (F.col("__n") <= max_bucket_size))
-            .drop("__n")
+    Worst case: ``contains`` is ``UTF8String.contains``, O(|a|·|b|)
+    per pair, and a capped bucket holds at most m·(m-1)/2 pairs —
+    32,640 at the default ``max_bucket_size`` of 256.
+    """
+    scanned = banded.filter(F.col("band_id") < n_bands)
+    if "__bucket_n" not in scanned.columns:
+        scanned = lsh.size_buckets(scanned)
+    small = scanned.filter(
+        (F.col("__bucket_n") > 1) & (F.col("__bucket_n") <= max_bucket_size)
+    )
+    pairs = lsh.candidate_pairs(small, max_bucket_size)
+    sides = docs.select(id_col, F.col(text_col).alias("text"))
+    a, b = F.col("text_a"), F.col("text_b")
+    return (
+        attach_pair_sides(pairs, sides, ["text"], id_col)
+        .filter(
+            ((F.length(a) > 0) & b.contains(a)) | ((F.length(b) > 0) & a.contains(b))
         )
-    with_text = sized.join(
-        docs.select(F.col(id_col).alias("clip_id"), F.col(text_col).alias("text")),
-        "clip_id",
+        .select("id_a", "id_b", F.lit(1).alias("contained"))
     )
-    part = (
-        with_text.select("band_id", "band_hash", "clip_id", "text")
-        .repartition("band_id", "band_hash")
-        .sortWithinPartitions("band_id", "band_hash")
-    )
-    found = part.mapInPandas(_containment_scanner(max_bucket_size), _CONTAIN_SCHEMA)
-    return found.groupBy("id_a", "id_b").agg(F.max("contained").alias("contained"))

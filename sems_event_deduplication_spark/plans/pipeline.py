@@ -5,7 +5,7 @@
       -> exact dedup on content digests          [stage: exact_dedup]
       -> MinHash + SimHash signatures (Arrow)    [stage: signatures]
       -> LSH candidates (text + audio)           [stage: candidates]
-      -> verify (Jaccard / Hamming / suffix-SA)  [stage: verified_pairs]
+      -> verify (Jaccard / Hamming / contains)   [stage: verified_pairs]
       -> connected components (star/star)        [stage: components]
       -> clusters + survivors + metrics          [stages: clusters, survivors]
 
@@ -410,8 +410,7 @@ class DedupPipeline:
             # No pre-salting shuffle here: the verify equi-join hashes by
             # id_a/id_b regardless, so a salt repartition is a wasted pass
             # over the candidate table. Hot verify keys (one doc in many
-            # pairs) are handled by AQE skew-join splitting; lsh.salted()
-            # remains available for clusters running with AQE off.
+            # pairs) are handled by AQE skew-join splitting.
             # exact Jaccard runs on the int64 shingle-hash arrays, not the
             # 9-char string shingles: same value (xxhash64 collisions in
             # ~10^2-element sets are ~2^-50) at a fraction of the join

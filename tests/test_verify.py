@@ -1,4 +1,4 @@
-"""Verify tiers: LSH candidates, Jaccard, containment suffix arrays."""
+"""Verify tiers: LSH candidates, Jaccard, substring containment."""
 
 from __future__ import annotations
 
@@ -123,33 +123,111 @@ def test_bucket_stats_counts_star_degradation(spark):
     }
 
 
-def test_suffix_array_matches_naive():
-    """Rank-doubling SA must equal the naive slice-sort on random and
-    pathologically repetitive strings (the shape that made slice keys
-    quadratic)."""
-    import numpy as np
-
-    from sems_event_deduplication_spark.operators.verify import _suffix_array
-
-    rng = np.random.default_rng(3)
-    cases = ["", "a", "banana\x00ana", "aaaaaaaaaa", "abababababab"]
-    for _ in range(10):
-        n = int(rng.integers(2, 200))
-        cases.append("".join(rng.choice(list("ab\x00cd"), size=n)))
-    for s in cases:
-        naive = sorted(range(len(s)), key=lambda i: s[i:])
-        assert _suffix_array(s) == naive, s[:40]
+def _containment_case(spark, rows, texts):
+    banded = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["clip_id", "band_id", "band_hash"])
+    )
+    docs = spark.createDataFrame(
+        pd.DataFrame({"clip_id": list(texts), "transcript_norm": list(texts.values())})
+    )
+    return banded, docs
 
 
-def test_suffix_array_repetitive_fast():
-    """100k chars of pure repetition must finish in well under a second
-    (the slice-key form took minutes here)."""
+def _brute_containment(rows, texts, max_bucket_size, n_bands):
+    """The definition: every pair inside a bucket of the first n_bands
+    bands with 2..max_bucket_size members where one non-empty text is
+    a substring of the other."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    buckets = defaultdict(list)
+    for cid, band, h in rows:
+        if band < n_bands:
+            buckets[(band, h)].append(cid)
+    out = set()
+    for members in buckets.values():
+        if not 1 < len(members) <= max_bucket_size:
+            continue
+        for x, y in combinations(sorted(members), 2):
+            tx, ty = texts[x], texts[y]
+            if (tx and tx in ty) or (ty and ty in tx):
+                out.add((x, y))
+    return out
+
+
+def test_containment_matches_brute_force(spark):
+    """containment_pairs == the brute-force definition, exactly (no
+    duplicate rows), on raw and size_buckets inputs."""
+    from sems_event_deduplication_spark.operators.lsh import size_buckets
+
+    texts = {
+        "dup1": "typhoon mawar slams into guam",
+        "dup2": "typhoon mawar slams into guam",
+        "empty1": "",
+        "empty2": "",
+        "short": "river basin",
+        "long1": "flood warning for the malawi river basin area",
+        "long2": "the river basin floods again",
+        "other": "wildfire near the coast",
+        "cap0": "same capped text",
+        "cap1": "same capped text",
+        "cap2": "same capped text",
+        "cap3": "same capped text",
+        "hi1": "band two only",
+        "hi2": "band two only here",
+    }
+    rows = (
+        # identical texts, colliding on both scanned bands (one output row)
+        [("dup1", 0, 1), ("dup2", 0, 1), ("dup1", 1, 1), ("dup2", 1, 1)]
+        # empty transcripts are contained in nothing and contain nothing
+        + [("empty1", 0, 2), ("empty2", 0, 2), ("dup1", 0, 2)]
+        # one text inside two others (the two longs unrelated), at the cap
+        + [("short", 1, 3), ("long1", 1, 3), ("long2", 1, 3)]
+        # a small bucket with no containment
+        + [("other", 1, 8), ("long1", 1, 8)]
+        # over the cap of 3: skipped although every pair is contained
+        + [("cap%d" % i, 0, 4) for i in range(4)]
+        # a true containment on band 2 >= n_bands: not scanned
+        + [("hi1", 2, 5), ("hi2", 2, 5)]
+        # singleton
+        + [("other", 0, 6)]
+    )
+    banded, docs = _containment_case(spark, rows, texts)
+    want = _brute_containment(rows, texts, max_bucket_size=3, n_bands=2)
+    assert want == {("dup1", "dup2"), ("long1", "short"), ("long2", "short")}
+    for inp in (banded, size_buckets(banded)):
+        got = containment_pairs(inp, docs, max_bucket_size=3, n_bands=2).collect()
+        assert sorted((r["id_a"], r["id_b"]) for r in got) == sorted(want)
+        assert all(r["contained"] == 1 for r in got)
+
+
+def test_containment_repetitive_bucket_bounded(spark):
+    """A full capped bucket of repetitive texts (the O(|a|·|b|) shape
+    of a naive substring scan) stays well inside a generous bound."""
     import time
 
-    from sems_event_deduplication_spark.operators.verify import _suffix_array
-
-    s = "ab" * 50_000
+    cap = 256
+    half = cap // 2
+    texts = {f"b{i:03d}": "a" * (1000 + i) + "b" for i in range(half)}
+    texts.update({f"c{i:03d}": "a" * (2000 + i) for i in range(half)})
+    rows = [(cid, 0, 7) for cid in texts]
+    banded, docs = _containment_case(spark, rows, texts)
     t0 = time.monotonic()
-    sa = _suffix_array(s)
-    assert len(sa) == 100_000
-    assert time.monotonic() - t0 < 5.0
+    n = containment_pairs(banded, docs, max_bucket_size=cap).count()
+    # every pair within a half is contained, no cross-half pair is
+    assert n == 2 * half * (half - 1) // 2
+    assert time.monotonic() - t0 < 60.0
+
+
+def test_containment_plan_has_no_python_nodes(spark):
+    """The containment tier must stay native: no Python worker node in
+    its executed plan."""
+    texts = {"s": "river basin", "l": "the malawi river basin", "o": "coast"}
+    rows = [("s", 0, 1), ("l", 0, 1), ("o", 0, 1)]
+    banded, docs = _containment_case(spark, rows, texts)
+    got = containment_pairs(banded, docs, CFG.max_bucket_size)
+    assert {(r["id_a"], r["id_b"]) for r in got.collect()} == {("l", "s")}
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "ArrowEvalPython", "FlatMapGroupsInPandas",
+                 "BatchEvalPython"):
+        assert node not in plan, plan
