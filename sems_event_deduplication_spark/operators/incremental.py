@@ -19,6 +19,13 @@ it without re-clustering the world. This operator family is that path:
 - ``incremental_dedup`` — end-to-end: exact digest hits (anti-join
   form), near-dup hits (band join -> Jaccard verify), and the novel
   remainder that should be appended to the index.
+- ``append_to_index`` / ``load_index`` — the standing index is the
+  base signatures table plus one committed increment directory per
+  ingest batch. ``load_index`` reads all committed increments in ONE
+  parquet scan with the base's schema (flat plan and job count as
+  increments accumulate); ``append_to_index`` checks the increment's
+  columns against the base before writing, since that read cannot
+  tell a missing column from nulls.
 
 Shuffle shape: the index side is read pre-banded (the pipeline's
 ``signatures`` stage persists bands), so the join shuffles only
@@ -264,8 +271,17 @@ def append_to_index(
     Layout: each ingest batch lands as its own committed increment
     directory ``<name>__inc/batch=<batch_id>/`` next to the pipeline's
     base ``<name>`` table — never rewriting the (100 TB-scale) base.
-    ``load_index`` unions the base with every COMMITTED increment, so
-    a reader never sees a half-written batch.
+    ``load_index`` unions the base with one scan over every COMMITTED
+    increment directory, read with the base's schema, so a reader never
+    sees a half-written batch.
+
+    Schema check: before anything is written, ``novel_signed`` must
+    carry every base column with the base's type (``ValueError``
+    naming each missing or retyped column otherwise). The schema-
+    supplied read would turn a missing column into silent nulls, so
+    the check sits on the write side, where a bad increment can still
+    be refused instead of poisoning the index. Extra columns are
+    allowed; the index never reads them.
 
     Idempotency/retry: the write is keyed by ``batch_id`` —
       - a retry of a batch whose commit marker never landed overwrites
@@ -298,6 +314,19 @@ def append_to_index(
             "transactional writeTo(...).append() / MERGE into the "
             "signatures table instead"
         )
+    base = wh.load_clean(name)
+    have = {f.name: f.dataType.simpleString() for f in novel_signed.schema}
+    bad = [
+        f"{f.name} (index {f.dataType.simpleString()}, "
+        f"increment {have.get(f.name, 'missing')})"
+        for f in base.schema
+        if have.get(f.name) != f.dataType.simpleString()
+    ]
+    if bad:
+        raise ValueError(
+            f"append_to_index: novel_signed does not match the {name!r} "
+            f"index schema: {', '.join(bad)}"
+        )
     sub = f"{name}__inc/batch={batch_id}"
     if n_chunks and n_chunks > 1:
         marker = _os.path.join(wh._path(sub), "_SUCCESS")
@@ -311,17 +340,33 @@ def append_to_index(
     else:
         if not wh.exists(sub):
             wh.save(novel_signed, sub, stage=f"{name}_increment")
-    return load_index(wh, name)
+    return _union_committed(wh, name, base)
 
 
 def load_index(wh, name: str = "signatures") -> DataFrame:
     """The standing signature index: the pipeline's base ``<name>``
-    table unioned with every committed ``append_to_index`` increment
-    (uncommitted/partial batch directories are invisible). Column sets
-    are reconciled by name; the base's column order wins."""
+    table unioned with every COMMITTED ``append_to_index`` increment
+    (a batch directory without its batch-level ``_SUCCESS`` is never
+    listed, so a partial batch stays invisible).
+
+    The increments are ONE scan: every committed ``batch=*`` directory
+    is read by a single parquet read with the base's schema and
+    ``recursiveFileLookup``, then unioned with the base once. The
+    supplied schema skips the per-directory schema-inference job and
+    drops columns the base lacks (``_lineage_*``); the recursive lookup
+    reads plain ``batch=X/`` and chunked ``batch=X/chunk=i/`` increments
+    alike (no partition discovery, hidden ``_temporary`` dirs skipped).
+    The plan and its job count therefore stay flat as increments
+    accumulate. An increment missing a base column would read back as
+    nulls, which ``append_to_index`` refuses at write time."""
+    return _union_committed(wh, name, wh.load_clean(name))
+
+
+def _union_committed(wh, name: str, base: DataFrame) -> DataFrame:
+    """``load_index`` over an already-read base frame (``append_to_index``
+    reuses the one it checked: one schema-inference job fewer)."""
     import os as _os
 
-    base = wh.load_clean(name)
     inc_root = wh._path(f"{name}__inc")
     if not wh._fs_exists(inc_root):
         return base
@@ -336,14 +381,14 @@ def load_index(wh, name: str = "signatures") -> DataFrame:
             for d in sorted(_os.listdir(inc_root))
             if d.startswith("batch=")
         ]
-    out = base
-    for d in batch_dirs:
-        if not wh._fs_exists(_os.path.join(d, "_SUCCESS")):
-            continue
-        inc = wh.spark.read.parquet(d)
-        inc = inc.drop(
-            *[c for c in ("_lineage_stage", "_lineage_part", "chunk")
-              if c in inc.columns]
-        )
-        out = out.unionByName(inc.select(*base.columns))
-    return out
+    committed = [
+        d for d in batch_dirs if wh._fs_exists(_os.path.join(d, "_SUCCESS"))
+    ]
+    if not committed:
+        return base
+    inc = (
+        wh.spark.read.schema(base.schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(*committed)
+    )
+    return base.unionByName(inc)

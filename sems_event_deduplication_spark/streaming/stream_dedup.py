@@ -26,6 +26,9 @@ Both are testable synchronously with a memory sink
 
 from __future__ import annotations
 
+import hashlib
+from array import array
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -349,11 +352,11 @@ def _sketch_prep(
 # one per operator call, and `release_stoplists()` unpersists them all
 # when the queries stop (ADVICE r5: per-call persist leak).
 # Keys: id(frame) for DataFrame inputs (entry stores the source frame
-# so a recycled id cannot alias), or ("vals", <sorted value tuple>) for
-# oversized value lists — value-keyed, because each call materializes a
-# FRESH internal DataFrame for a list input and an id()-keyed entry
-# would never hit again (one pinned copy per call: exactly the leak
-# this registry exists to prevent).
+# so a recycled id cannot alias), or ("vals", <count>, <sha256 of the
+# sorted int64 values>) for oversized value lists — value-keyed, because
+# each call materializes a FRESH internal DataFrame for a list input and
+# an id()-keyed entry would never hit again (one pinned copy per call:
+# exactly the leak this registry exists to prevent).
 _STOPLIST_CACHE: dict[object, tuple[DataFrame | None, DataFrame]] = {}
 
 # a literal isin above this many values bloats the plan/codegen that
@@ -366,7 +369,9 @@ def release_stoplists() -> int:
     """Unpersist every stop-key frame `_apply_bucket_stoplist` pinned
     and clear the registry; returns how many were released. Call after
     the streaming queries using them have stopped (a long-lived driver
-    running many queries otherwise accumulates pinned frames)."""
+    running many queries otherwise accumulates pinned frames), and when
+    a rotated stop-list replaces an old one: a new value list is a new
+    cache entry, so the old list's pinned copy stays until released."""
     n = 0
     for _src, cached in _STOPLIST_CACHE.values():
         cached.unpersist()
@@ -409,8 +414,8 @@ def _apply_bucket_stoplist(signed: DataFrame, bucket_stoplist) -> DataFrame:
         return signed
     if not isinstance(bucket_stoplist, DataFrame):
         # dedup + sort: isin semantics are unchanged, the literal is
-        # deterministic, and the tuple doubles as the value-based cache
-        # key for the anti-join path below
+        # deterministic, and its digest is the value-based cache key for
+        # the anti-join path below
         vals = sorted({int(v) for v in bucket_stoplist})
         if not vals:
             return signed
@@ -423,7 +428,11 @@ def _apply_bucket_stoplist(signed: DataFrame, bucket_stoplist) -> DataFrame:
         # each call builds a fresh DataFrame here, so an id()-keyed
         # entry could never hit again and every call would pin a new
         # persisted copy (the per-call leak this registry fixes).
-        cache_key = ("vals", tuple(vals))
+        # The key is a digest, not the values: the registry lives as long
+        # as the driver, and a tuple key would pin up to ~100k ints there.
+        cache_key = (
+            "vals", len(vals), hashlib.sha256(array("q", vals).tobytes()).hexdigest()
+        )
         cached_entry = _STOPLIST_CACHE.get(cache_key)
         if cached_entry is not None:
             return signed.join(

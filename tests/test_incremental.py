@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from sems_event_deduplication_spark.conf import DedupConfig
 from sems_event_deduplication_spark.operators.incremental import (
@@ -336,3 +337,142 @@ def test_append_to_index_refuses_iceberg_backend(spark, cfg):
     )
     with pytest.raises(NotImplementedError, match="Iceberg|writeTo"):
         append_to_index(novel, wh, batch_id="b1")
+
+
+def _novel(spark, cfg, prefix: str, n: int):
+    return sign_batch(
+        spark.createDataFrame(
+            pd.DataFrame({
+                "clip_id": [f"{prefix}{i}" for i in range(n)],
+                "transcript": [
+                    f"{prefix} report {i} on topic {i * 13} for the day"
+                    for i in range(n)
+                ],
+            })
+        ),
+        cfg,
+    )
+
+
+def _index_wh(spark, cfg, tag: str, extra_col: bool = False):
+    import tempfile
+
+    from sems_event_deduplication_spark.sources.warehouse import WarehouseIO
+
+    wh = WarehouseIO(spark, tempfile.mkdtemp(prefix=f"wh_{tag}_"))
+    base = _novel(spark, cfg, "base", len(BASE))
+    if extra_col:
+        base = base.withColumn("extra", F.lit(7))
+    wh.save(base, "signatures")
+    return wh
+
+
+def test_load_index_equals_brute_force_union(spark, cfg):
+    """The one-scan index equals, row for row, the base unioned with a
+    separate read of every committed increment: plain and chunked
+    increments are all there, and uncommitted batch dirs (a chunked
+    write without its batch marker, a plain write without _SUCCESS)
+    contribute nothing."""
+    import os
+
+    from sems_event_deduplication_spark.operators.incremental import (
+        append_to_index, load_index,
+    )
+
+    wh = _index_wh(spark, cfg, "eq")
+    append_to_index(_novel(spark, cfg, "p1_", 6), wh, "p1")
+    append_to_index(_novel(spark, cfg, "ch_", 9), wh, "ch", n_chunks=4)
+    append_to_index(_novel(spark, cfg, "p2_", 3), wh, "p2")
+    wh.checkpoint_chunked(_novel(spark, cfg, "pc_", 5),
+                          "signatures__inc/batch=partial_chunked", "clip_id", 4)
+    wh.save(_novel(spark, cfg, "pp_", 4), "signatures__inc/batch=partial_plain")
+    os.remove(os.path.join(
+        wh.base_dir, "signatures__inc", "batch=partial_plain", "_SUCCESS"
+    ))
+
+    base = wh.load_clean("signatures")
+    expect = base
+    inc_root = os.path.join(wh.base_dir, "signatures__inc")
+    for b in sorted(os.listdir(inc_root)):
+        d = os.path.join(inc_root, b)
+        if not os.path.exists(os.path.join(d, "_SUCCESS")):
+            continue
+        chunks = [os.path.join(d, c) for c in os.listdir(d)
+                  if c.startswith("chunk=")]
+        for path in chunks or [d]:
+            expect = expect.unionByName(
+                spark.read.parquet(path).select(*base.columns)
+            )
+
+    def rows(df):
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    got = load_index(wh)
+    assert got.columns == base.columns
+    assert rows(got) == rows(expect)
+    assert got.count() == len(BASE) + 6 + 9 + 3
+
+
+def test_load_index_one_scan_flat_jobs(spark, cfg):
+    """Index read cost does not grow with the increment count: with 1, 4
+    and 12 committed increments the optimized plan has at most two file
+    scans (base + increments), and building the frame launches the same
+    number of Spark jobs."""
+    from sems_event_deduplication_spark.operators.incremental import (
+        append_to_index, load_index,
+    )
+
+    wh = _index_wh(spark, cfg, "bound")
+    sc = spark.sparkContext
+    jobs = {}
+    committed = 0
+    for n in (1, 4, 12):
+        while committed < n:
+            append_to_index(_novel(spark, cfg, f"i{committed}_", 2), wh,
+                            f"i{committed:02d}")
+            committed += 1
+        group = f"load_index_bound_{n}"
+        sc.setJobGroup(group, group)
+        try:
+            idx = load_index(wh)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+        plan = idx._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("Relation [") <= 2, plan
+        assert idx.count() == len(BASE) + 2 * n
+    assert jobs[1] == jobs[4] == jobs[12], jobs
+
+
+def test_append_to_index_refuses_schema_mismatch(spark, cfg):
+    """An increment that would not read back as the base's columns is
+    refused before anything is written: a missing base column (it would
+    read as nulls) and a retyped one both raise, naming the column, and
+    leave no batch dir behind. Extra increment columns are allowed and
+    are not read."""
+    import os
+
+    from sems_event_deduplication_spark.operators.incremental import (
+        append_to_index, load_index,
+    )
+
+    wh = _index_wh(spark, cfg, "schema", extra_col=True)
+    novel = _novel(spark, cfg, "n", 3)
+    inc_root = os.path.join(wh.base_dir, "signatures__inc")
+
+    with pytest.raises(ValueError, match="extra"):
+        append_to_index(novel, wh, "missing")
+    with pytest.raises(ValueError, match="extra"):
+        append_to_index(novel.withColumn("extra", F.lit("7")), wh, "retyped")
+    assert not os.path.exists(inc_root)
+
+    grown = append_to_index(
+        novel.withColumn("extra", F.lit(8)).withColumn("more", F.lit(1.5)),
+        wh, "ok",
+    )
+    assert "more" not in grown.columns
+    assert sorted(r["extra"] for r in load_index(wh).collect()) == (
+        [7] * len(BASE) + [8] * 3
+    )

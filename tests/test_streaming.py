@@ -377,3 +377,26 @@ def test_hot_bucket_keys_distinct_ids(spark):
     # distinct-id mode flags ONLY the boilerplate keys (6 distinct docs)
     ids_rows = by_ids.collect()
     assert len(ids_rows) == 4 and all(r["n_members"] == 6 for r in ids_rows)
+
+
+def test_stoplist_value_cache_keyed_by_digest(spark):
+    """Oversized value lists are cached under a fixed-size digest key,
+    not a tuple of every value: the same 5,000-value list applied twice
+    is one entry, a different list is a second, and release_stoplists()
+    frees both."""
+    from sems_event_deduplication_spark.streaming import stream_dedup as S
+
+    S.release_stoplists()  # isolate from other tests
+    signed = spark.range(20).select(
+        F.concat(F.lit("c"), F.col("id")).alias("clip_id"),
+        F.col("id").alias("bucket_key"),
+    )
+    vals = list(range(5, 5005))
+    assert S._apply_bucket_stoplist(signed, vals).count() == 5
+    assert S._apply_bucket_stoplist(signed, vals).count() == 5
+    assert len(S._STOPLIST_CACHE) == 1
+    (key,) = S._STOPLIST_CACHE
+    assert key[:2] == ("vals", 5000) and len(key) == 3 and isinstance(key[2], str)
+    assert S._apply_bucket_stoplist(signed, vals[1:] + [9999]).count() == 6
+    assert len(S._STOPLIST_CACHE) == 2
+    assert S.release_stoplists() == 2
