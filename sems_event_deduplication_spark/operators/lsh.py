@@ -21,7 +21,8 @@ Scale design (the part that must survive 10¹² rows):
   no salt repartition before verification.
 - Pairs are deduped across bands with a groupBy on (id_a, id_b) —
   map-side partial aggregation collapses most duplicates before the
-  shuffle.
+  shuffle. ``bucket_pairs`` is the per-bucket expansion before that
+  groupBy; the pipeline groups it once for every verify tier.
 """
 
 from __future__ import annotations
@@ -53,35 +54,29 @@ def size_buckets(banded: DataFrame) -> DataFrame:
     )
 
 
-def candidate_pairs(
-    banded: DataFrame,
-    max_bucket_size: int = 256,
-) -> DataFrame:
-    """(clip_id, band_id, band_hash) -> distinct (id_a, id_b), id_a < id_b.
+def bucket_pairs(sized: DataFrame, max_bucket_size: int = 256) -> DataFrame:
+    """``size_buckets`` output -> one ``(id_a, id_b, band_id, small)`` row
+    per pair per bucket, id_a < id_b — the pair expansion every
+    candidate consumer shares (``candidate_pairs`` groups it per pair;
+    the pipeline's fused verify groups it once with per-tier flags).
 
-    Small buckets: full intra-bucket pairs. Oversized buckets: star
+    Small buckets (``1 < size <= max_bucket_size``, ``small`` true):
+    full intra-bucket pairs. Oversized buckets (``small`` false): star
     edges to the bucket minimum (O(m)); the recall degradation is
-    reported by ``bucket_stats`` — the pipeline runs it per banded
-    input and surfaces the counts in its stage metrics.
-
-    Accepts either a raw ``(clip_id, band_id, band_hash)`` frame or an
-    already-``size_buckets``-ed one (detected by column).
+    reported by ``bucket_stats``.
 
     Physical shape (r6): small-bucket pairs are generated by a grouped
-    collect + JVM-side array expansion instead of the former bucket
-    self-join. The groupBy shares the ``size_buckets`` window's
+    collect + JVM-side array expansion instead of a bucket self-join.
+    The groupBy shares the ``size_buckets`` window's
     ``(band_id, band_hash)`` partitioning, so the whole small-pair path
     adds ZERO exchanges (the join version built and broadcast a copy of
-    the banded frame per call — one BroadcastExchange + join gone,
-    plan-verified in plans/r06/). The collected member list is bounded
-    by ``max_bucket_size`` (the filter runs before the agg), so the agg
-    buffer is capped exactly like the join's per-bucket output was.
-    Output is identical: ``sort_array`` orders members, so expanding
-    (i, j > i) combinations emits each unordered pair once with
-    id_a < id_b — the join's ``id_a < id_b`` filter in array form.
+    the banded frame per call — plan-verified in plans/r06/). The
+    collected member list is bounded by ``max_bucket_size`` (the filter
+    runs before the agg), so the agg buffer is capped exactly like the
+    join's per-bucket output was. ``sort_array`` orders members, so
+    expanding (i, j > i) combinations emits each unordered pair once
+    per bucket with id_a < id_b.
     """
-    sized = banded if "__bucket_n" in banded.columns else size_buckets(banded)
-
     small = sized.filter(
         (F.col("__bucket_n") <= max_bucket_size) & (F.col("__bucket_n") > 1)
     )
@@ -101,8 +96,8 @@ def candidate_pairs(
         )
     )
     small_pairs = (
-        members.select(F.explode(pair_structs).alias("p"))
-        .select("p.id_a", "p.id_b")
+        members.select("band_id", F.explode(pair_structs).alias("p"))
+        .select("p.id_a", "p.id_b", "band_id", F.lit(True).alias("small"))
         # strict inequality, exactly like the join's id_a < id_b: a
         # degenerate bucket holding the same id twice must not emit a
         # self-pair (sorted order makes every other pair id_a < id_b)
@@ -112,11 +107,27 @@ def candidate_pairs(
     big_pairs = (
         sized.filter(F.col("__bucket_n") > max_bucket_size)
         .filter(F.col("clip_id") != F.col("__bucket_min"))
-        .select(F.col("__bucket_min").alias("id_a"), F.col("clip_id").alias("id_b"))
+        .select(
+            F.col("__bucket_min").alias("id_a"), F.col("clip_id").alias("id_b"),
+            "band_id", F.lit(False).alias("small"),
+        )
     )
+    return small_pairs.unionByName(big_pairs)
 
+
+def candidate_pairs(
+    banded: DataFrame,
+    max_bucket_size: int = 256,
+) -> DataFrame:
+    """(clip_id, band_id, band_hash) -> distinct (id_a, id_b,
+    n_shared_bands), id_a < id_b: ``bucket_pairs`` grouped per pair.
+
+    Accepts either a raw ``(clip_id, band_id, band_hash)`` frame or an
+    already-``size_buckets``-ed one (detected by column).
+    """
+    sized = banded if "__bucket_n" in banded.columns else size_buckets(banded)
     return (
-        small_pairs.unionByName(big_pairs)
+        bucket_pairs(sized, max_bucket_size)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
     )

@@ -17,18 +17,53 @@ Three verify tiers, cheapest first:
 
 Audio tier: Hamming distance on SimHash via native ``bit_count(a^b)``.
 
+Each tier's test is one Column predicate (``jaccard_rule``,
+``containment_rule``, ``hamming_rule``) shared by the per-tier
+functions and the pipeline's fused pass (``tier_flags`` +
+``verify_flagged``).
+
 Shuffle notes: candidates join the (id -> signature/shingles) table
 twice (for a/b sides). The signature table is projected to exactly the
-needed columns first so the payload (``bytes``) never moves.
+needed columns first so the payload (``bytes``) never moves. The fused
+pass attaches the sides ONCE for all tiers — one pair of joins carrying
+every tier's columns instead of a pair per tier.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..conf import DedupConfig
+from ..functions.audio import hamming_distance
 from ..functions.minhash import estimated_jaccard, exact_jaccard
 from . import lsh
+
+
+def jaccard_rule(
+    sig_a: Column, sig_b: Column, shingles_a: Column, shingles_b: Column,
+    num_perm: int, jaccard_threshold: float, est_margin: float,
+) -> Column:
+    """The text tier's test: the signature estimate clears
+    ``t - margin`` and, only then (``AND`` short-circuits), the exact
+    shingle Jaccard clears ``t``."""
+    est = estimated_jaccard(sig_a, sig_b, num_perm)
+    return (est >= F.lit(max(0.0, jaccard_threshold - est_margin))) & (
+        exact_jaccard(shingles_a, shingles_b) >= F.lit(jaccard_threshold)
+    )
+
+
+def containment_rule(text_a: Column, text_b: Column) -> Column:
+    """The containment tier's test: one non-empty text is a substring
+    of the other."""
+    return ((F.length(text_a) > 0) & text_b.contains(text_a)) | (
+        (F.length(text_b) > 0) & text_a.contains(text_b)
+    )
+
+
+def hamming_rule(sim_a: Column, sim_b: Column, hamming_threshold: int) -> Column:
+    """The audio tier's test: SimHash Hamming distance <= h."""
+    return hamming_distance(sim_a, sim_b) <= F.lit(hamming_threshold)
 
 
 def attach_pair_sides(
@@ -82,16 +117,13 @@ def verify_jaccard(
     joined = attach_pair_sides(
         pairs, sides, [sig_col, shingles_col], id_col, sides_b=sides_b
     )
-    est = estimated_jaccard(F.col(f"{sig_col}_a"), F.col(f"{sig_col}_b"), num_perm)
-    prefiltered = joined.withColumn("__est", est).filter(
-        F.col("__est") >= F.lit(max(0.0, jaccard_threshold - est_margin))
-    )
-    exact = exact_jaccard(F.col(f"{shingles_col}_a"), F.col(f"{shingles_col}_b"))
-    return (
-        prefiltered.withColumn("jaccard", exact)
-        .filter(F.col("jaccard") >= F.lit(jaccard_threshold))
-        .select("id_a", "id_b", "jaccard")
-    )
+    sig_a, sig_b = F.col(f"{sig_col}_a"), F.col(f"{sig_col}_b")
+    sh_a, sh_b = F.col(f"{shingles_col}_a"), F.col(f"{shingles_col}_b")
+    return joined.filter(
+        jaccard_rule(
+            sig_a, sig_b, sh_a, sh_b, num_perm, jaccard_threshold, est_margin
+        )
+    ).select("id_a", "id_b", exact_jaccard(sh_a, sh_b).alias("jaccard"))
 
 
 def verify_hamming(
@@ -102,15 +134,11 @@ def verify_hamming(
     sim_col: str = "audio_simhash",
 ) -> DataFrame:
     """Audio candidates -> pairs with SimHash Hamming distance <= h."""
-    from ..functions.audio import hamming_distance
-
     sides = docs.select(id_col, sim_col)
     joined = attach_pair_sides(pairs, sides, [sim_col], id_col)
-    dist = hamming_distance(F.col(f"{sim_col}_a"), F.col(f"{sim_col}_b"))
-    return (
-        joined.withColumn("hamming", dist)
-        .filter(F.col("hamming") <= F.lit(hamming_threshold))
-        .select("id_a", "id_b", "hamming")
+    sim_a, sim_b = F.col(f"{sim_col}_a"), F.col(f"{sim_col}_b")
+    return joined.filter(hamming_rule(sim_a, sim_b, hamming_threshold)).select(
+        "id_a", "id_b", hamming_distance(sim_a, sim_b).alias("hamming")
     )
 
 
@@ -148,11 +176,107 @@ def containment_pairs(
     )
     pairs = lsh.candidate_pairs(small, max_bucket_size)
     sides = docs.select(id_col, F.col(text_col).alias("text"))
-    a, b = F.col("text_a"), F.col("text_b")
     return (
         attach_pair_sides(pairs, sides, ["text"], id_col)
-        .filter(
-            ((F.length(a) > 0) & b.contains(a)) | ((F.length(b) > 0) & a.contains(b))
-        )
+        .filter(containment_rule(F.col("text_a"), F.col("text_b")))
         .select("id_a", "id_b", F.lit(1).alias("contained"))
     )
+
+
+def tier_flags(
+    pair_rows: DataFrame,
+    text_bands: int,
+    containment_bands: int,
+    with_audio: bool = True,
+    pre_verified: DataFrame | None = None,
+) -> DataFrame:
+    """``lsh.bucket_pairs`` rows over the shared text + audio band frame
+    (``band_id < text_bands`` is text, the rest audio) -> one row per
+    distinct (id_a, id_b) with a boolean per tier that must test it:
+
+    - ``text``: the pair shares any text bucket (small or star edge);
+    - ``containment``: it shares a SMALL bucket among the first
+      ``containment_bands`` text bands (the ``containment_pairs``
+      slice: star edges never ship transcripts);
+    - ``audio`` (``with_audio``): it shares any audio bucket;
+    - ``audio_offset`` (given ``pre_verified``, pairs another tier
+      already verified): set on those rows, which need no test here.
+
+    One groupBy for every tier, so the pairs are aggregated once and
+    no union + groupBy merges per-tier verdicts afterwards.
+    """
+    band = F.col("band_id")
+    flags = {
+        "text": band < text_bands,
+        "containment": F.col("small")
+        & (band < min(containment_bands, text_bands)),
+    }
+    if with_audio:
+        flags["audio"] = band >= text_bands
+    rows = pair_rows.select(
+        "id_a", "id_b", *[c.alias(k) for k, c in flags.items()]
+    )
+    if pre_verified is not None:
+        rows = rows.withColumn("audio_offset", F.lit(False)).unionByName(
+            pre_verified.select(
+                "id_a", "id_b", *[F.lit(False).alias(k) for k in flags],
+                F.lit(True).alias("audio_offset"),
+            )
+        )
+    return rows.groupBy("id_a", "id_b").agg(
+        *[F.bool_or(k).alias(k) for k in rows.columns[2:]]
+    )
+
+
+def verify_flagged(
+    flagged: DataFrame, docs: DataFrame, cfg: DedupConfig
+) -> DataFrame:
+    """``tier_flags`` pairs -> verified (id_a, id_b, jaccard, kinds).
+
+    The sides every tier reads (MinHash signature, shingle hashes,
+    normalized transcript, SimHash) are attached ONCE, and each tier's
+    rule is evaluated only where its flag is set (``when``-guarded, so
+    the exact Jaccard still runs only behind the estimate prefilter).
+    ``kinds`` is the sorted names of the tiers that passed, ``jaccard``
+    the exact text Jaccard, raised to 1.0 for a containment pair (null
+    for audio-only pairs); pairs no tier passes are dropped. Same rows
+    as each tier's own function unioned and grouped per pair.
+    """
+    tiers = sorted(c for c in flagged.columns if c not in ("id_a", "id_b"))
+    cols = ["minhash_sig", "shingle_hashes", "transcript_norm"]
+    if "audio" in tiers:
+        cols.append("audio_simhash")
+    joined = attach_pair_sides(flagged, docs.select("clip_id", *cols), cols)
+
+    def a(c: str) -> Column:
+        return F.col(f"{c}_a")
+
+    def b(c: str) -> Column:
+        return F.col(f"{c}_b")
+
+    rules = {
+        "text": jaccard_rule(
+            a("minhash_sig"), b("minhash_sig"),
+            a("shingle_hashes"), b("shingle_hashes"),
+            cfg.num_perm, cfg.jaccard_threshold, cfg.est_margin,
+        ),
+        "containment": containment_rule(a("transcript_norm"), b("transcript_norm")),
+        "audio": hamming_rule(
+            a("audio_simhash"), b("audio_simhash"), cfg.hamming_threshold
+        ),
+        "audio_offset": F.lit(True),
+    }
+    passed = {k: F.when(F.col(k), rules[k]) for k in tiers}
+    kinds = F.filter(
+        F.array(*[F.when(passed[k], F.lit(k)) for k in tiers]),
+        lambda k: k.isNotNull(),
+    )
+    jaccard = F.greatest(
+        F.when(
+            passed["text"], exact_jaccard(a("shingle_hashes"), b("shingle_hashes"))
+        ),
+        F.when(passed["containment"], F.lit(1.0)),
+    )
+    return joined.select(
+        "id_a", "id_b", jaccard.alias("jaccard"), kinds.alias("kinds")
+    ).filter(F.size("kinds") > 0)

@@ -4,8 +4,12 @@
       -> normalize (native exprs)                [stage: normalized]
       -> exact dedup on content digests          [stage: exact_dedup]
       -> MinHash + SimHash signatures (Arrow)    [stage: signatures]
-      -> LSH candidates (text + audio)           [stage: candidates]
-      -> verify (Jaccard / Hamming / contains)   [stage: verified_pairs]
+      -> LSH candidates: one pair set, a flag    [stage: candidates]
+         per verify tier (text, containment,
+         audio, offset audio)
+      -> verify: ONE pass, every tier's rule     [stage: verified_pairs]
+         (Jaccard / contains / Hamming) where
+         its flag is set, sides attached once
       -> connected components (star/star)        [stage: components]
       -> clusters + survivors + metrics          [stages: clusters, survivors]
 
@@ -158,17 +162,24 @@ class DedupPipeline:
         checkpoint_mode: str = "all",
         payload_in_survivors: bool = True,
     ) -> PipelineResult:
-        """checkpoint_mode:
+        """Verification is one pass: the candidate pairs of every tier
+        are grouped once with a flag per tier, the sides are attached
+        once, and each tier's rule runs where its flag is set
+        (``verify.tier_flags`` + ``verify.verify_flagged``).
+
+        checkpoint_mode:
         - "all": every stage materializes to the warehouse (finest
-          resume granularity; the test suite uses this).
-        - "min": only signatures / verified_pairs / components /
-          survivors / clusters checkpoint. Candidate pairs are NOT
-          materialized — they are a pure re-derivation of the committed
-          signature table (explode + window + self-join), so committing
-          them buys no resume granularity that verified_pairs doesn't
-          already provide, and at production latency the two extra
-          commits are pure floor. Cheap projections and windows stay
-          lazy and fuse into the downstream stage.
+          resume granularity; the test suite uses this), candidates as
+          ONE ``candidates`` table of flagged pairs.
+        - "min": only signatures / exact_edges / verified_pairs /
+          components / survivors / clusters checkpoint. Candidate pairs
+          are NOT materialized — they are a pure re-derivation of the
+          committed signature table (explode + window + pair
+          expansion), so committing them buys no resume granularity
+          that verified_pairs doesn't already provide, and at
+          production latency the extra commit is pure floor. Cheap
+          projections and windows stay lazy and fuse into the
+          downstream stage.
 
         payload_in_survivors: when False the survivors table carries
         clip metadata but not ``bytes`` — the 100 TB shape: payloads are
@@ -357,16 +368,17 @@ class DedupPipeline:
 
         # ---- LSH candidates ------------------------------------------------
         # The band-bucket exchange (explode -> window on (band_id,
-        # band_hash)) is the shared substrate of candidate generation,
-        # the star-edge observability stats, and the containment
-        # pre-filter. Compute it ONCE — r6: for BOTH modalities in a
+        # band_hash)) is the shared substrate of candidate generation
+        # (every verify tier) and the star-edge observability stats.
+        # Compute it ONCE — r6: for BOTH modalities in a
         # single exchange — persist it (narrow: id + band ints + two
         # window columns), and let every consumer read the cache.
         # Text and audio bands are concatenated before the explode, so
         # the positional band_id is 0..bands-1 for text and
         # bands..bands+simhash_bands-1 for audio: the id spaces are
-        # disjoint, buckets can never mix across modalities, and each
-        # modality's consumers filter their slice of the one cached,
+        # disjoint, buckets can never mix across modalities, the
+        # candidate pass tells the tiers apart by band_id, and the
+        # per-modality stats filter their slice of the one cached,
         # already-partitioned frame (one shuffle + one cache
         # materialization instead of two of each; per-modality pair
         # sets and bucket stats are unchanged because every
@@ -397,45 +409,7 @@ class DedupPipeline:
         # the persisted band-bucket frames into executor storage for the
         # rest of the application
         try:
-            cand_text = lsh.candidate_pairs(sized_text, cfg.max_bucket_size)
-            cand_text = maybe_stage(cand_text, "candidates_text")
-
-            if with_audio:
-                cand_audio = lsh.candidate_pairs(sized_audio, cfg.max_bucket_size)
-                cand_audio = maybe_stage(cand_audio, "candidates_audio")
-            else:
-                cand_audio = None
-
-            # ---- verify ----------------------------------------------------
-            # No pre-salting shuffle here: the verify equi-join hashes by
-            # id_a/id_b regardless, so a salt repartition is a wasted pass
-            # over the candidate table. Hot verify keys (one doc in many
-            # pairs) are handled by AQE skew-join splitting.
-            # exact Jaccard runs on the int64 shingle-hash arrays, not the
-            # 9-char string shingles: same value (xxhash64 collisions in
-            # ~10^2-element sets are ~2^-50) at a fraction of the join
-            # payload and intersect cost
-            pairs_text = verify.verify_jaccard(
-                cand_text, sigs, cfg.num_perm, cfg.jaccard_threshold, cfg.est_margin,
-                shingles_col="shingle_hashes",
-            ).withColumn("kind", F.lit("text"))
-
-            contain = verify.containment_pairs(
-                sized_text, sigs, cfg.max_bucket_size, n_bands=cfg.containment_bands
-            ).select("id_a", "id_b", F.lit(1.0).alias("jaccard")).withColumn(
-                "kind", F.lit("containment")
-            )
-            verified = pairs_text.unionByName(contain)
-
-            if with_audio:
-                pairs_audio = verify.verify_hamming(
-                    cand_audio, sigs, cfg.hamming_threshold
-                ).select(
-                    "id_a", "id_b", F.lit(None).cast("double").alias("jaccard"),
-                    F.lit("audio").alias("kind"),
-                )
-                verified = verified.unionByName(pairs_audio)
-
+            offset_pairs = None
             if offset_tier:
                 from ..operators.audio_segments import (
                     audio_offset_pairs_from_sigs, landmark_inverted_index,
@@ -447,17 +421,32 @@ class DedupPipeline:
                 offset_pairs = audio_offset_pairs_from_sigs(
                     sigs, cfg, cfg.landmark_containment, cfg.landmark_min_shared,
                     sized_inverted=sized_lm, verify_mode=cfg.offset_verify_mode,
-                ).select(
-                    "id_a", "id_b", F.lit(None).cast("double").alias("jaccard"),
-                    F.lit("audio_offset").alias("kind"),
                 )
-                verified = verified.unionByName(offset_pairs)
 
-            verified = verified.groupBy("id_a", "id_b").agg(
-                F.max("jaccard").alias("jaccard"),
-                F.sort_array(F.collect_set("kind")).alias("kinds"),
+            # ---- candidates: every bucket's pairs once, flagged per tier --
+            # One pair expansion over the shared band-bucket cache and ONE
+            # groupBy(id_a, id_b) carrying a flag per verify tier (text,
+            # containment, audio; the offset tier's already-verified pairs
+            # join the same aggregation).
+            candidates = verify.tier_flags(
+                lsh.bucket_pairs(sized_all, cfg.max_bucket_size),
+                n_text_bands, cfg.containment_bands, with_audio,
+                pre_verified=offset_pairs,
             )
-            verified = stage(verified, "verified_pairs")
+            candidates = maybe_stage(candidates, "candidates")
+
+            # ---- verify: one pass for every tier ---------------------------
+            # The sides are attached once (2 joins, not 2 per tier) and each
+            # tier's rule runs only where its flag is set. No pre-salting
+            # shuffle: the side joins hash by id_a/id_b regardless, and hot
+            # keys (one doc in many pairs) are split by AQE skew handling.
+            # Exact Jaccard runs on the int64 shingle-hash arrays, not the
+            # 9-char string shingles: same value (xxhash64 collisions in
+            # ~10^2-element sets are ~2^-50) at a fraction of the join
+            # payload and intersect cost.
+            verified = stage(
+                verify.verify_flagged(candidates, sigs, cfg), "verified_pairs"
+            )
 
             # stats AFTER the verified materialization so every cache is
             # already populated: ONE unioned collect over cached

@@ -289,8 +289,17 @@ class WarehouseIO:
     def checkpoint(self, df: DataFrame, name: str, resume: bool = False) -> DataFrame:
         """Write-through checkpoint: reuse a committed table when
         ``resume``; otherwise compute, persist, and read back (which
-        also truncates lineage like ``df.checkpoint()``, but durably)."""
+        also truncates lineage like ``df.checkpoint()``, but durably).
+
+        The Parquet read-back supplies the schema just written
+        (``df.schema``, which leaves out the lineage columns) instead
+        of inferring it, so it launches no footer-reading job; file
+        sources make every field nullable either way, so the result's
+        schema equals ``load_clean(name).schema``. The resume and
+        Iceberg paths read through ``load_clean``."""
         if resume and self.exists(name):
             return self.load_clean(name)
         self.save(df, name)
-        return self.load_clean(name)
+        if self.use_iceberg:
+            return self.load_clean(name)
+        return self.spark.read.schema(df.schema).parquet(self._path(name))

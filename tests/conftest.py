@@ -28,3 +28,32 @@ def corpus(spark, corpus_pdf):
     from sems_event_deduplication_spark.synth import AUDIO_CLIPS_SCHEMA
 
     return spark.createDataFrame(corpus_pdf, schema=AUDIO_CLIPS_SCHEMA).cache()
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """count_jobs(fn) -> Spark jobs ``fn()`` launched: those tagged with
+    a fresh job group in this thread plus untagged ones (jobs submitted
+    from helper threads do not inherit the group)."""
+    import itertools
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    calls = itertools.count()
+
+    def count(fn) -> int:
+        bus.waitUntilEmpty()
+        before = set(sc.statusTracker().getJobIdsForGroup(None))
+        group = f"count_jobs_{next(calls)}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        bus.waitUntilEmpty()
+        tracker = sc.statusTracker()
+        untagged = set(tracker.getJobIdsForGroup(None)) - before
+        return len(tracker.getJobIdsForGroup(group)) + len(untagged)
+
+    return count

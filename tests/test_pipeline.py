@@ -94,7 +94,7 @@ def test_resume_idempotent(spark, corpus):
     r1 = pipe.run(corpus, with_audio=True)
     want = {frozenset(r["member_ids"]) for r in r1.clusters.collect()}
     # simulate a crash after the signatures stage: later tables vanish
-    for stage in ("candidates_text", "candidates_audio", "verified_pairs",
+    for stage in ("candidates", "verified_pairs",
                   "components", "survivors", "clusters"):
         wh.drop(stage)
     r2 = pipe.run(corpus, resume=True, with_audio=True)
@@ -442,3 +442,247 @@ def test_offset_dups_recovered_via_landmark_tier(spark):
 
     assert recovered(with_offset=True) == planted
     assert len(recovered(with_offset=False)) < len(planted) / 2
+
+
+# ---- fused verify: equivalence with the per-tier formula -----------------
+
+_SYLLABLES = ["ka", "lo", "mi", "ne", "su", "ta", "ri", "po", "ve", "dz", "qu", "xo"]
+
+
+def _words(rng, n: int) -> str:
+    return " ".join(
+        "".join(rng.choice(_SYLLABLES, size=int(rng.integers(2, 5))))
+        for _ in range(n)
+    )
+
+
+def _tier_corpus():
+    """Background corpus (its nearaud rows are audio-only dups) plus
+    crafted rows, each on its own unrelated audio unless stated: text
+    near dups close to the 0.8 threshold, transcripts contained in a
+    longer one at J < 0.8, near-dup transcripts on a noisy copy of the
+    same audio (text + audio), and a 12-member boilerplate family over
+    a star cap of 8 whose bucket minimum ``bp00`` is contained in
+    every other member."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(2024)
+    background = make_corpus_pdf(n_base=60, seed=3)
+    pool = make_corpus_pdf(n_base=160, seed=7)
+    bases = pool[pool["clip_id"].str.endswith("_base")].set_index("group_id")
+    nearaud = pool[pool["clip_id"].str.endswith("_nearaud")].set_index("group_id")
+    unique = iter(bases.drop(index=nearaud.index).itertuples())
+    rows = []
+
+    def add(cid, text, audio):
+        rows.append({
+            "clip_id": cid, "bytes": audio.bytes, "sr_hz": audio.sr_hz,
+            "dur_ms": audio.dur_ms, "codec": audio.codec, "transcript": text,
+            "event_date": audio.event_date, "group_id": "fixture",
+        })
+
+    for i in range(8):
+        t = _words(rng, 18)
+        add(f"tx{i}a", t, next(unique))
+        add(f"tx{i}b", t + " " + _words(rng, 3), next(unique))
+    for i in range(8):
+        t = _words(rng, 14)
+        add(f"ct{i}a", t, next(unique))
+        add(f"ct{i}b", t + " " + _words(rng, 3), next(unique))
+    for i, g in enumerate(nearaud.index[:2]):
+        t = _words(rng, 18)
+        add(f"ta{i}a", t, bases.loc[g])
+        add(f"ta{i}b", t + " " + _words(rng, 1), nearaud.loc[g])
+    boiler = _words(rng, 16)
+    add("bp00", boiler, next(unique))
+    for i in range(1, 12):
+        add(f"bp{i:02d}", f"{boiler} ref {i:02d}", next(unique))
+    return pd.concat([background, pd.DataFrame(rows)], ignore_index=True)
+
+
+def _reference_verified(wh, cfg, with_offset: bool):
+    """The per-tier formula the fused pass replaced: each tier's public
+    function over its own candidates, unioned and grouped per pair.
+    Reads the run's committed signatures and exact edges."""
+    from sems_event_deduplication_spark.operators import lsh, verify
+    from sems_event_deduplication_spark.operators.audio_segments import (
+        audio_offset_pairs_from_sigs,
+    )
+    from sems_event_deduplication_spark.operators.exact_dedup import (
+        kept_from_edges,
+    )
+
+    sigs = kept_from_edges(
+        wh.load_clean("signatures"), wh.load_clean("exact_edges"), "clip_id",
+        cfg.exact_dedup_strategy, cfg.exact_dedup_max_broadcast_ids,
+    )
+    text_b = lsh.explode_bands(sigs, "clip_id", "bands")
+    audio_b = lsh.explode_bands(sigs, "clip_id", "audio_bands")
+    cap = cfg.max_bucket_size
+    null = F.lit(None).cast("double")
+    tiers = [
+        verify.verify_jaccard(
+            lsh.candidate_pairs(text_b, cap), sigs, cfg.num_perm,
+            cfg.jaccard_threshold, cfg.est_margin, shingles_col="shingle_hashes",
+        ).select("id_a", "id_b", "jaccard", F.lit("text").alias("kind")),
+        verify.containment_pairs(
+            text_b, sigs, cap, n_bands=cfg.containment_bands
+        ).select(
+            "id_a", "id_b", F.lit(1.0).alias("jaccard"),
+            F.lit("containment").alias("kind"),
+        ),
+        verify.verify_hamming(
+            lsh.candidate_pairs(audio_b, cap), sigs, cfg.hamming_threshold
+        ).select("id_a", "id_b", null.alias("jaccard"), F.lit("audio").alias("kind")),
+    ]
+    if with_offset:
+        tiers.append(
+            audio_offset_pairs_from_sigs(
+                sigs, cfg, cfg.landmark_containment, cfg.landmark_min_shared,
+                verify_mode=cfg.offset_verify_mode,
+            ).select(
+                "id_a", "id_b", null.alias("jaccard"),
+                F.lit("audio_offset").alias("kind"),
+            )
+        )
+    union = tiers[0]
+    for t in tiers[1:]:
+        union = union.unionByName(t)
+    ref = union.groupBy("id_a", "id_b").agg(
+        F.max("jaccard").alias("jaccard"),
+        F.sort_array(F.collect_set("kind")).alias("kinds"),
+    )
+    return ref, sigs, text_b
+
+
+def _pair_rows(df):
+    return sorted(
+        (r["id_a"], r["id_b"], r["jaccard"], tuple(r["kinds"])) for r in df.collect()
+    )
+
+
+class _RecordingWarehouse(WarehouseIO):
+    """Keeps every frame ``checkpoint`` returns, by stage name."""
+
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        self.returned: dict = {}
+
+    def checkpoint(self, df, name, resume=False):
+        out = super().checkpoint(df, name, resume=resume)
+        self.returned[name] = out
+        return out
+
+
+@pytest.fixture(scope="module")
+def offset_run(spark):
+    """A with_offset_audio run in checkpoint_mode='all' (every stage,
+    the flagged ``candidates`` table included, goes through
+    ``WarehouseIO.checkpoint``)."""
+    from sems_event_deduplication_spark.synth import make_corpus_dist
+
+    clips = make_corpus_dist(
+        spark, n_base=24, seed=11, dur_lo=1.0, dur_hi=2.0, p_offset=0.5
+    ).localCheckpoint()
+    cfg = DedupConfig(with_offset_audio=True)
+    wh = _RecordingWarehouse(spark, tempfile.mkdtemp(prefix="wh_fused_offs_"))
+    res = DedupPipeline(spark, cfg, wh).run(
+        clips, with_audio=True, payload_in_survivors=False
+    )
+    return res, wh, cfg
+
+
+def test_fused_verify_equals_per_tier_union(spark):
+    """The pipeline's one verify pass commits exactly the rows of the
+    per-tier formula. The fixture (est_margin 0 and a star cap of 8 so
+    both guards matter) is checked to hold every case: text-only,
+    containment-only below the Jaccard threshold, audio-only and
+    two-tier pairs, star buckets whose edges join contained texts
+    (containment must skip them), and a pair the estimate prefilter
+    drops although its exact Jaccard clears the threshold."""
+    from dataclasses import replace
+
+    from sems_event_deduplication_spark.functions.minhash import (
+        estimated_jaccard, exact_jaccard,
+    )
+    from sems_event_deduplication_spark.operators import lsh, verify
+
+    cfg = replace(CFG, est_margin=0.0, max_bucket_size=8)
+    df = spark.createDataFrame(_tier_corpus(), schema=AUDIO_CLIPS_SCHEMA)
+    wh = WarehouseIO(spark, tempfile.mkdtemp(prefix="wh_fused_"))
+    res = DedupPipeline(spark, cfg, wh).run(
+        df, with_audio=True, checkpoint_mode="min", payload_in_survivors=False
+    )
+    ref, sigs, text_b = _reference_verified(wh, cfg, with_offset=False)
+    want = _pair_rows(ref)
+    assert _pair_rows(res.verified_pairs) == want
+
+    kinds = {w[3] for w in want}
+    assert {("text",), ("audio",), ("containment",)} <= kinds, kinds
+    assert any(len(k) > 1 for k in kinds), kinds
+    texts = dict(sigs.select("clip_id", "transcript_norm").collect())
+    assert any(
+        w[3] == ("containment",) and w[2] == 1.0
+        and texts[w[0]] in texts[w[1]] for w in want
+    )
+    assert res.lsh_stats["text"]["n_star_buckets"] > 0
+    stars = verify.attach_pair_sides(
+        lsh.bucket_pairs(lsh.size_buckets(text_b), cfg.max_bucket_size).filter(
+            ~F.col("small") & (F.col("band_id") < cfg.containment_bands)
+        ),
+        sigs.select("clip_id", F.col("transcript_norm").alias("t")), ["t"],
+    ).filter(verify.containment_rule(F.col("t_a"), F.col("t_b")))
+    contained = {(w[0], w[1]) for w in want if "containment" in w[3]}
+    assert {(r["id_a"], r["id_b"]) for r in stars.collect()} - contained
+    sides = verify.attach_pair_sides(
+        lsh.candidate_pairs(text_b, cfg.max_bucket_size),
+        sigs, ["minhash_sig", "shingle_hashes"],
+    )
+    a, b = F.col("minhash_sig_a"), F.col("minhash_sig_b")
+    sa, sb = F.col("shingle_hashes_a"), F.col("shingle_hashes_b")
+    prefiltered = {
+        (r["id_a"], r["id_b"])
+        for r in sides.filter(
+            (estimated_jaccard(a, b, cfg.num_perm)
+             < cfg.jaccard_threshold - cfg.est_margin)
+            & (exact_jaccard(sa, sb) >= cfg.jaccard_threshold)
+        ).collect()
+    }
+    assert prefiltered
+    assert not {(w[0], w[1]) for w in want if "text" in w[3]} & prefiltered
+
+
+def test_fused_verify_folds_offset_tier(offset_run):
+    """With the landmark offset tier on, its pairs join the same flags
+    aggregation: the committed rows equal the per-tier formula with
+    'audio_offset' in ``kinds``."""
+    res, wh, cfg = offset_run
+    ref, _, _ = _reference_verified(wh, cfg, with_offset=True)
+    want = _pair_rows(ref)
+    assert any("audio_offset" in w[3] for w in want)
+    assert _pair_rows(res.verified_pairs) == want
+
+
+def test_checkpoint_schema_equals_load_clean(offset_run):
+    """Every committed stage reads back with the schema written, which
+    is the schema an inferring ``load_clean`` sees."""
+    _, wh, _ = offset_run
+    assert {"candidates", "verified_pairs", "signatures", "clusters"} <= set(
+        wh.returned
+    )
+    for name, df in wh.returned.items():
+        assert df.schema == wh.load_clean(name).schema, name
+
+
+def test_min_mode_job_budget(spark, corpus, count_jobs):
+    """The flagship shape (checkpoint_mode='min') stays on its job
+    floor: one verify pass and schema-supplied checkpoint read-backs
+    keep a run of the test corpus at 24 Spark jobs (38 with a verify
+    pass per tier and an inferring read-back per stage)."""
+    corpus.count()  # the cached corpus materializes outside the count
+    wh = WarehouseIO(spark, tempfile.mkdtemp(prefix="wh_jobs_"))
+    n = count_jobs(lambda: DedupPipeline(spark, CFG, wh).run(
+        corpus, with_audio=True, checkpoint_mode="min"
+    ))
+    assert n <= 24, n

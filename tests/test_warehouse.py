@@ -209,3 +209,21 @@ def test_warehouse_hadoop_fs_branch_via_file_uri(spark, tmp_path):
     assert wh.load_clean("t").count() == 60
     wh.drop("t")
     assert not wh.exists("t")
+
+
+def test_checkpoint_read_back_launches_no_job(spark, tmp_path, count_jobs):
+    """``checkpoint`` runs exactly the jobs of the write: the read-back
+    supplies the written schema instead of inferring it from a
+    footer."""
+    wh = WarehouseIO(spark, str(tmp_path))
+    df = _df(spark).withColumn("tags", F.array(F.col("clip_id")))
+    n_save = count_jobs(lambda: wh.save(df, "saved"))
+    out = None
+
+    def run():
+        nonlocal out
+        out = wh.checkpoint(df, "checkpointed")
+
+    assert count_jobs(run) == n_save
+    assert out.schema == wh.load_clean("checkpointed").schema
+    assert sorted(out.collect()) == sorted(df.collect())
