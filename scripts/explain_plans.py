@@ -34,7 +34,7 @@ def main() -> None:
     from sems_event_deduplication_spark.functions import text as X
     from sems_event_deduplication_spark.operators import lsh, verify
     from sems_event_deduplication_spark.operators.exact_dedup import (
-        exact_dedup_with_edges,
+        digest_rank_edges, exact_dedup_digest_keys, kept_from_edges,
     )
     from sems_event_deduplication_spark.session import get_spark
     from sems_event_deduplication_spark.synth import make_corpus_dist
@@ -51,9 +51,17 @@ def main() -> None:
         "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript",
         X.normalize_text(F.col("transcript")).alias("transcript_norm"),
     )
-    exact, exact_edges = exact_dedup_with_edges(
-        normalized, text_col="transcript_norm", payload_col="bytes",
-        order_col="clip_id",
+    # exact dedup as the pipeline runs it: digests of the narrow
+    # projection -> keep-last edges, materialized -> keepers
+    digest_keys, digest_exprs = exact_dedup_digest_keys(
+        "transcript_norm", "bytes", cfg.exact_digest_algo
+    )
+    exact_edges = digest_rank_edges(
+        normalized.select("clip_id", *digest_exprs), digest_keys
+    ).localCheckpoint()
+    exact = kept_from_edges(
+        normalized, exact_edges, "clip_id",
+        cfg.exact_dedup_strategy, cfg.exact_dedup_max_broadcast_ids,
     )
     mh = M.make_minhash_udf(cfg.num_perm, cfg.seed)
     ash = A.make_audio_simhash_udf(
@@ -78,13 +86,6 @@ def main() -> None:
     asl = A.make_audio_sig_landmark_udf(
         cfg.fft_frame, cfg.fft_hop, cfg.n_mel_bands, cfg.simhash_bits,
         cfg.seed, cfg.fft_hop // 2,
-    )
-    from sems_event_deduplication_spark.operators.exact_dedup import (
-        exact_dedup_digest_keys,
-    )
-
-    digest_keys, digest_exprs = exact_dedup_digest_keys(
-        "transcript_norm", "bytes", cfg.exact_digest_algo
     )
     fused_sigs = (
         normalized.select("*", *digest_exprs)

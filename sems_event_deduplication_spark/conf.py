@@ -7,7 +7,7 @@ here a single config object parameterizes one run (SURVEY.md §1.2).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, asdict
+from dataclasses import dataclass
 
 from .functions.audio import FP_FLOOR_DB as _FP_FLOOR_DB
 
@@ -209,9 +209,6 @@ class DedupConfig:
     # --- spark knobs -------------------------------------------------
     shuffle_partitions: int = 32
     arrow_max_records: int = 10_000
-
-    def as_dict(self) -> dict:
-        return asdict(self)
 
     def __post_init__(self):
         if self.bands * self.rows_per_band != self.num_perm:

@@ -373,12 +373,6 @@ def pack_bits_to_words(bit_flags: np.ndarray, bits: int) -> list[int]:
     return [int(w) for w in np.packbits(padded, bitorder="little").view("<u8").view(np.int64)]
 
 
-def simhash_from_fingerprint(fp: np.ndarray, proj: np.ndarray) -> list[int]:
-    """Sign projection -> list of int64 words (bits = proj rows)."""
-    bits = (proj @ fp) > 0
-    return pack_bits_to_words(bits, len(bits))
-
-
 def make_audio_simhash_udf(
     frame: int, hop: int, n_bands: int, bits: int, seed: int,
     floor_db: float = FP_FLOOR_DB,
@@ -514,28 +508,6 @@ def landmarks_from_mag(
     return np.unique(np.concatenate([base | (dt // 2), base | ((dt + 1) // 2)]))
 
 
-def make_audio_landmark_udf(
-    frame: int, hop: int, peaks_per_frame: int = 5, fan_out: int = 5
-):
-    """pandas_udf (bytes, codec) -> array<long> distinct landmark
-    hashes ("audio shingles" for the offset/containment dedup path)."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def landmarks(buf: pd.Series, codec: pd.Series) -> pd.Series:
-        out: list[list[int]] = []
-        for b, c in zip(buf, codec):
-            if b is None or len(b) == 0:
-                out.append([])
-                continue
-            lm = audio_landmarks(
-                decode_pcm(bytes(b), c), frame, hop, peaks_per_frame, fan_out
-            )
-            out.append([int(v) for v in lm])
-        return pd.Series(out)
-
-    return landmarks
-
-
 def make_audio_sig_landmark_udf(
     frame: int,
     hop: int,
@@ -558,7 +530,8 @@ def make_audio_sig_landmark_udf(
     SimHash frames are exactly every (hop/lm_hop)-th landmark frame
     (same window length, same offsets), so ONE STFT serves both:
     a third less FFT work, the dominant cost of the signature stage.
-    Results are bit-identical to the separate UDFs (property-tested)."""
+    Its SimHash is bit-identical to ``make_audio_simhash_udf`` and its
+    landmarks to ``audio_landmarks`` at ``lm_hop`` (tested)."""
     proj = _projection(n_bands, bits, seed)
     n_w = _n_words(bits)
     stride = hop // lm_hop if (lm_hop > 0 and hop % lm_hop == 0) else 0

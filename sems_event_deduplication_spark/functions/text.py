@@ -47,11 +47,6 @@ def normalize_text(col: Column, strip_boilerplate: bool = True) -> Column:
     return F.trim(c)
 
 
-def with_date_suffix(text: Column, date: Column) -> Column:
-    """Reference ``temporal_title``: ``title (start_date)`` (P2)."""
-    return F.concat(text, F.lit(" ("), date.cast("string"), F.lit(")"))
-
-
 def char_shingles(col: Column, k: int) -> Column:
     """Distinct char k-shingles as array<string>; whole string if len < k.
 

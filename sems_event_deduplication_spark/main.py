@@ -29,7 +29,6 @@ def parse_args(argv):
     p.add_argument("--warehouse", required=True, help="checkpoint dir / catalog")
     p.add_argument("--resume", action="store_true", help="skip committed stages")
     p.add_argument("--no-audio", action="store_true")
-    p.add_argument("--checkpoint-mode", choices=["all", "min"], default="all")
     p.add_argument("--cores", type=int, default=None)
     p.add_argument("--config", nargs="*", default=[],
                    help="DedupConfig overrides, k=v (e.g. jaccard_threshold=0.7)")
@@ -76,12 +75,7 @@ def main(argv=None):
     wh = WarehouseIO(spark, args.warehouse)
     pipe = DedupPipeline(spark, cfg, wh)
     t0 = time.monotonic()
-    res = pipe.run(
-        clips,
-        resume=args.resume,
-        with_audio=not args.no_audio,
-        checkpoint_mode=args.checkpoint_mode,
-    )
+    res = pipe.run(clips, resume=args.resume, with_audio=not args.no_audio)
     wall = time.monotonic() - t0
     print(json.dumps({
         "n_clips": n,

@@ -28,15 +28,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..conf import DedupConfig
-from ..functions.audio import make_audio_landmark_udf
+from ..functions.audio import make_audio_sig_landmark_udf
 from . import lsh
 
 
 def audio_segment_signatures(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(clip_id, bytes, codec) -> (clip_id, landmarks)."""
-    lm = make_audio_landmark_udf(cfg.fft_frame, cfg.fft_hop // 2)
+    """(clip_id, bytes, codec) -> (clip_id, landmarks), from the same
+    one-pass UDF and landmark hop (``fft_hop // 2``) as the pipeline's
+    signature stage."""
+    asl = make_audio_sig_landmark_udf(
+        cfg.fft_frame, cfg.fft_hop, cfg.n_mel_bands, cfg.simhash_bits,
+        cfg.seed, cfg.fft_hop // 2, floor_db=cfg.fp_floor_db,
+    )
     return clips.select(
-        "clip_id", lm(F.col("bytes"), F.col("codec")).alias("landmarks")
+        "clip_id",
+        asl(F.col("bytes"), F.col("codec")).getField("landmarks").alias("landmarks"),
     )
 
 

@@ -7,27 +7,18 @@ deterministic and distribution-safe:
 
     row_number() OVER (PARTITION BY key ORDER BY ord DESC) = 1
 
-For the big pipeline the exact key is a content digest
-``sha2(transcript) [, sha2(bytes)]`` so the (possibly huge) payload
-never becomes a shuffle key.
+For the big pipeline the exact key is a content digest of the
+transcript and payload (``exact_dedup_digest_keys``), so the (possibly
+huge) payload never becomes a shuffle key. The pipeline composes the
+operator from three steps: digest keys -> ``digest_rank_edges`` over
+the narrow projection -> ``kept_from_edges`` against the committed edge
+table.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def dedup_keep_last(
-    df: DataFrame, key_cols: list[str], order_col: str
-) -> DataFrame:
-    """Keep the last row (max order_col) per key. Deterministic."""
-    w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def digest_rank_edges(
@@ -37,9 +28,10 @@ def digest_rank_edges(
     order_col: str = "clip_id",
 ) -> DataFrame:
     """The keep-last ranking core: (id, order, digest keys) ->
-    (id_a = keeper, id_b = dropped) edge list. Shared by
-    ``exact_dedup_with_edges`` and the pipeline's fused scan path so
-    keep-last semantics and edge orientation cannot drift apart.
+    (id_a = keeper, id_b = dropped) edge list. Both pipeline scan
+    modes rank through it, so keep-last semantics and edge orientation
+    cannot drift apart. The window only ever sees this narrow
+    projection: the binary payload never rides the digest shuffle.
 
     Skew bound: the window partitions by the digest keys, so a
     boilerplate mega-dup family (one digest shared by m rows) sorts its
@@ -83,7 +75,32 @@ def kept_from_edges(
     """Keeper rows of ``df`` given a MATERIALIZED edge table (e.g. a
     warehouse checkpoint): resolve the re-attach strategy (auto counts
     the cheap materialized table, never the payload lineage) and apply
-    the corresponding join. Shared by both pipeline scan modes."""
+    the corresponding join. Shared by both pipeline scan modes.
+
+    The dropped rows still belong in the final clusters: the edges feed
+    connected components so exact dups re-attach to their keeper's
+    component. Payload rows re-attach via an id join picked by
+    ``strategy``:
+
+    - ``anti_broadcast``: broadcast the **dropped**-id set and
+      ``left_anti``-join the payload table against it. The dropped set
+      is exactly what dedup removes — at a realistic dup rate a small
+      fraction of the corpus, unlike the keeper set (≈ all rows), so
+      the broadcast stays driver-safe even at 10⁹+ input rows.
+    - ``semi_broadcast``: broadcast the keeper ids + ``left_semi`` —
+      right only when the dup rate is huge (keepers ≪ dropped).
+    - ``shuffle``: plain ``left_anti`` with no broadcast hint — the
+      fallback when *both* id sets outgrow the driver; on a real
+      cluster pair it with tables bucketed by ``id_col``
+      (``WarehouseIO.save_bucketed``) so neither side exchanges.
+    - ``auto`` (default): count the dropped ids (one cheap narrow job)
+      and pick ``anti_broadcast`` vs ``shuffle`` at
+      ``max_broadcast_ids`` — the only mode safe at ANY dup rate.
+
+    The broadcast hint is explicit because AQE materializes both
+    shuffle sides before converting a sort-merge join, which would
+    exchange the payload; an unconditional keeper broadcast would be a
+    driver bomb at scale (keepers ≈ all unique rows)."""
     dropped_ids = edges.select(F.col("id_b").alias(id_col))
     strategy = resolve_dedup_strategy(strategy, dropped_ids, max_broadcast_ids)
     if strategy == "anti_broadcast":
@@ -150,74 +167,3 @@ def exact_dedup_digest_keys(
         ]
     return key_names, digests
 
-
-def exact_dedup_with_edges(
-    df: DataFrame,
-    id_col: str = "clip_id",
-    text_col: str = "transcript_norm",
-    payload_col: str | None = "bytes",
-    order_col: str = "clip_id",
-    strategy: str = "auto",
-    max_broadcast_ids: int = 20_000_000,
-    precomputed_edges: DataFrame | None = None,
-    algo: str = "xxh128",
-) -> tuple[DataFrame, DataFrame]:
-    """Exact dedup + the (kept_id, dropped_id) edge list.
-
-    The dropped rows must still appear in the final clusters (the
-    reference keeps them implicitly because it dedups the *same* frame
-    it clusters); the edges feed connected components so exact dups
-    re-attach to their keeper's component.
-
-    Shuffle shape (the 100 TB concern): the ranking window only ever
-    sees the **narrow** projection (id, order, digests) — the binary
-    payload never rides the digest shuffle. Payload rows re-attach via
-    an id join whose plan is picked by ``strategy``:
-
-    - ``anti_broadcast``: broadcast the **dropped**-id set and
-      ``left_anti``-join the payload table against it. The dropped set
-      is exactly what dedup removes — at a realistic dup rate it is a
-      small fraction of the corpus, unlike the keeper set (≈ all rows),
-      so the broadcast stays driver-safe even at 10⁹+ input rows.
-    - ``semi_broadcast``: broadcast the keeper ids + ``left_semi`` —
-      right only when the dup rate is huge (keepers ≪ dropped).
-    - ``shuffle``: plain ``left_anti`` with no broadcast hint — the
-      fallback when *both* id sets outgrow the driver; on a real
-      cluster pair it with tables bucketed by ``id_col``
-      (``WarehouseIO.save_bucketed``) so neither side exchanges.
-    - ``auto`` (default): count the dropped ids (one cheap narrow job)
-      and pick ``anti_broadcast`` vs ``shuffle`` at ``max_broadcast_ids``
-      — the only mode safe at ANY dup rate, so it is the default; the
-      explicit modes skip the count when the caller knows the shape.
-
-    The old unconditional keeper broadcast was a driver bomb at scale
-    (keepers ≈ all unique rows); explicit broadcast is still needed
-    because AQE materializes both shuffle sides before converting a
-    sort-merge join, which would exchange the payload.
-
-    ``precomputed_edges``: an already-materialized edge table (e.g. a
-    committed warehouse checkpoint on resume) — the digest scan and
-    ranking are skipped entirely, so a resumed run never re-pays the
-    payload-digest pass.
-    """
-    if precomputed_edges is not None:
-        edges = precomputed_edges
-    else:
-        key_names, digests = exact_dedup_digest_keys(text_col, payload_col, algo)
-        base_cols = [id_col] if order_col == id_col else [id_col, order_col]
-        edges = digest_rank_edges(
-            df.select(*base_cols, *digests), key_names, id_col, order_col
-        )
-        if strategy == "auto":
-            # materialize the (tiny) edge list before the auto count:
-            # the count's lineage otherwise re-runs the full digest
-            # scan — sha2 over the payload column — once for the count
-            # and again when the returned plans execute (a duplicated
-            # full payload pass at exactly the scale "auto" protects).
-            # (The pipeline avoids even this single extra
-            # materialization by staging the edges to the warehouse
-            # first and calling kept_from_edges on the committed table.)
-            edges = edges.localCheckpoint()
-
-    kept = kept_from_edges(df, edges, id_col, strategy, max_broadcast_ids)
-    return kept, edges

@@ -1,10 +1,11 @@
 """End-to-end dedup pipeline (SURVEY.md §3.1 new-engine lifecycle).
 
     read audio_clips
-      -> normalize (native exprs)                [stage: normalized]
-      -> exact dedup on content digests          [stage: exact_dedup]
-      -> MinHash + SimHash signatures (Arrow)    [stage: signatures]
-      -> LSH candidates: one pair set, a flag    [stage: candidates]
+      -> normalize (native exprs)                [lazy]
+      -> digests + MinHash + SimHash (+ offset   [stage: signatures]
+         landmarks) in one payload pass (Arrow)
+      -> exact dedup: keep-last digest edges     [stage: exact_edges]
+      -> LSH candidates: one pair set, a flag    [lazy]
          per verify tier (text, containment,
          audio, offset audio)
       -> verify: ONE pass, every tier's rule     [stage: verified_pairs]
@@ -13,11 +14,14 @@
       -> connected components (star/star)        [stage: components]
       -> clusters + survivors + metrics          [stages: clusters, survivors]
 
-Every stage checkpoints through WarehouseIO (resume = skip committed
-stages, the reference's exists-check pattern at
-``create_silver_label.py:224``). The binary payload is dropped right
-after signature computation and re-joined only for the survivor
-output, so ``bytes`` never rides a shuffle (SURVEY.md §7 hard part d).
+(``signature_scan_mode="dedup_first"`` commits ``exact_edges`` first and
+fingerprints only the keepers.) The six committed stages checkpoint
+through WarehouseIO (resume = skip committed stages, the reference's
+exists-check pattern at ``create_silver_label.py:224``); everything
+between them stays lazy and fuses into the next committed stage. The binary
+payload is dropped right after signature computation and re-joined only
+for the survivor output, so ``bytes`` never rides a shuffle (SURVEY.md
+§7 hard part d).
 """
 
 from __future__ import annotations
@@ -93,11 +97,17 @@ def _estimated_scan_partitions(df: DataFrame, max_partition_bytes: int = 64 << 2
 
 @dataclass
 class StageMetric:
+    """One timed step of a run. ``rows_out`` of a committed stage is the
+    row count of its table, read from an Observation on the write; it
+    is -1 when the stage was loaded from a committed checkpoint on
+    resume (nothing was written, so nothing was counted) and for the
+    timing-only steps that write no table (``exact_auto_count``,
+    ``lsh_stats_collect``). ``cc_fixpoint`` reports its edge count."""
+
     stage: str
     rows_out: int
     seconds: float
     write_sec: float = 0.0
-    count_sec: float = 0.0
 
 
 @dataclass
@@ -141,17 +151,23 @@ class DedupPipeline:
 
     def _stage(
         self, df: DataFrame, name: str, resume: bool,
-        metrics: list[StageMetric], count_rows: bool = True,
+        metrics: list[StageMetric], chunks: int = 0,
     ) -> DataFrame:
+        """Commit one stage and record its metric. ``chunks > 0`` commits
+        it as that many independent chunk partitions (S8 mid-stage
+        commits): a job killed at chunk k resumes at chunk k. The row
+        count comes from the write itself, so no extra job runs."""
         t0 = time.monotonic()
-        out = self.wh.checkpoint(df, name, resume=resume)
+        if chunks > 0:
+            out = self.wh.checkpoint_chunked(
+                df, name, self.cfg.signature_chunk_col,
+                n_chunks=chunks, resume=resume,
+            )
+        else:
+            out = self.wh.checkpoint(df, name, resume=resume)
         t1 = time.monotonic()
-        # row counts are metrics sugar, not needed for correctness: in
-        # min-checkpoint mode every count is one more job on the
-        # latency floor, so the caller turns them off (rows = -1)
-        n = out.count() if count_rows else -1
-        t2 = time.monotonic()
-        metrics.append(StageMetric(name, n, t2 - t0, t1 - t0, t2 - t1))
+        n = self.wh.rows_written(name)
+        metrics.append(StageMetric(name, n, time.monotonic() - t0, t1 - t0))
         return out
 
     def run(
@@ -159,7 +175,7 @@ class DedupPipeline:
         clips: DataFrame,
         resume: bool = False,
         with_audio: bool = True,
-        checkpoint_mode: str = "all",
+        checkpoint_mode: str = "min",
         payload_in_survivors: bool = True,
     ) -> PipelineResult:
         """Verification is one pass: the candidate pairs of every tier
@@ -167,44 +183,38 @@ class DedupPipeline:
         once, and each tier's rule runs where its flag is set
         (``verify.tier_flags`` + ``verify.verify_flagged``).
 
-        checkpoint_mode:
-        - "all": every stage materializes to the warehouse (finest
-          resume granularity; the test suite uses this), candidates as
-          ONE ``candidates`` table of flagged pairs.
-        - "min": only signatures / exact_edges / verified_pairs /
-          components / survivors / clusters checkpoint. Candidate pairs
-          are NOT materialized — they are a pure re-derivation of the
-          committed signature table (explode + window + pair
-          expansion), so committing them buys no resume granularity
-          that verified_pairs doesn't already provide, and at
-          production latency the extra commit is pure floor. Cheap
-          projections and windows stay lazy and fuse into the
-          downstream stage.
+        Checkpoints: signatures, exact_edges, verified_pairs,
+        components, survivors and clusters commit to the warehouse;
+        with ``resume`` a committed stage is loaded instead of
+        recomputed. Normalization, the exact-dedup keeper join and the
+        candidate pairs are NOT materialized: each is a pure
+        re-derivation of the input or of the committed table before it,
+        so committing it buys no resume granularity the next commit
+        doesn't already provide, and at production latency the extra
+        commit is pure floor. ``checkpoint_mode`` accepts only ``"min"``, the name of
+        this layout (any other value raises ``ValueError``).
 
         payload_in_survivors: when False the survivors table carries
         clip metadata but not ``bytes`` — the 100 TB shape: payloads are
         immutable in the lake and are addressed by ``clip_id``, never
         rewritten by the dedup job.
         """
+        if checkpoint_mode != "min":
+            raise ValueError(
+                f"checkpoint_mode must be 'min', got {checkpoint_mode!r}"
+            )
         cfg = self.cfg
         t_run = time.monotonic()
         metrics: list[StageMetric] = []
-        cp_all = checkpoint_mode == "all"
 
-        def stage(df: DataFrame, name: str) -> DataFrame:
-            return self._stage(df, name, resume, metrics, count_rows=cp_all)
-
-        def maybe_stage(df: DataFrame, name: str) -> DataFrame:
-            if cp_all:
-                return stage(df, name)
-            return df
+        def stage(df: DataFrame, name: str, chunks: int = 0) -> DataFrame:
+            return self._stage(df, name, resume, metrics, chunks)
 
         # ---- normalize (native exprs only) -------------------------------
         normalized = clips.select(
             "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript",
             X.normalize_text(F.col("transcript")).alias("transcript_norm"),
         )
-        normalized = maybe_stage(normalized, "normalized")
 
         offset_tier = with_audio and cfg.with_offset_audio
         fused_scan = cfg.signature_scan_mode == "fused"
@@ -259,27 +269,6 @@ class DedupPipeline:
         if offset_tier:
             sig_cols += ["landmarks"]
 
-        def sig_stage(df: DataFrame) -> DataFrame:
-            """The signatures checkpoint — the longest stage of a real
-            run. With cfg.signature_chunks > 0 it commits as that many
-            independent chunk partitions (S8 mid-stage commits): a job
-            killed at chunk k resumes at chunk k instead of recomputing
-            hours of fingerprints."""
-            if cfg.signature_chunks > 0:
-                t0 = time.monotonic()
-                out = self.wh.checkpoint_chunked(
-                    df, "signatures", cfg.signature_chunk_col,
-                    n_chunks=cfg.signature_chunks, resume=resume,
-                )
-                t1 = time.monotonic()
-                n = out.count() if cp_all else -1
-                t2 = time.monotonic()
-                metrics.append(
-                    StageMetric("signatures", n, t2 - t0, t1 - t0, t2 - t1)
-                )
-                return out
-            return stage(df, "signatures")
-
         if fused_scan:
             # ---- ONE payload pass: digests + every signature -------------
             # Exact dedup then ranks the narrow digest projection of the
@@ -301,8 +290,12 @@ class DedupPipeline:
                 cfg.exact_digest_algo,
             )
             enriched = src.select("*", *digests)
-            sigs_all = sig_stage(
-                add_signature_columns(enriched).select(*sig_cols, *keys)
+            # the longest stage of a real run: cfg.signature_chunks > 0
+            # commits it in chunks, so a killed job does not recompute
+            # hours of fingerprints
+            sigs_all = stage(
+                add_signature_columns(enriched).select(*sig_cols, *keys),
+                "signatures", cfg.signature_chunks,
             )
 
             exact_edges = stage(
@@ -351,7 +344,6 @@ class DedupPipeline:
             metrics.append(
                 StageMetric("exact_auto_count", -1, time.monotonic() - t_kept)
             )
-            exact = maybe_stage(exact, "exact_dedup")
 
             # ---- signatures (payload dropped after this stage) -----------
             # spread the Arrow-UDF work across every core — but only
@@ -364,7 +356,10 @@ class DedupPipeline:
             # core busy without that shuffle.
             if _estimated_scan_partitions(normalized) < cores:
                 exact = exact.repartition(cores * 2)
-            sigs = sig_stage(add_signature_columns(exact).select(*sig_cols))
+            sigs = stage(
+                add_signature_columns(exact).select(*sig_cols),
+                "signatures", cfg.signature_chunks,
+            )
 
         # ---- LSH candidates ------------------------------------------------
         # The band-bucket exchange (explode -> window on (band_id,
@@ -433,7 +428,6 @@ class DedupPipeline:
                 n_text_bands, cfg.containment_bands, with_audio,
                 pre_verified=offset_pairs,
             )
-            candidates = maybe_stage(candidates, "candidates")
 
             # ---- verify: one pass for every tier ---------------------------
             # The sides are attached once (2 joins, not 2 per tier) and each

@@ -12,6 +12,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_DRIVER_MEM`` when set, else the
+    smaller of 24g and half the host's physical memory. A fixed 24g
+    overcommits a small host, and a second Spark process beside it can
+    get either driver killed."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "24g"
+    return f"{min(24 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "sems-dedup-spark",
     cores: int | None = None,
@@ -45,7 +60,7 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             os.environ.get("SPARK_ARROW_BATCH", "10000"),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # streaming state (r5): RocksDB provider with changelog

@@ -69,21 +69,3 @@ def union_hierarchical(parts: list[DataFrame]) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p, allowMissingColumns=True)
     return out
-
-
-def read_json_events(
-    spark: SparkSession, path: str, schema: T.StructType | None = None,
-    instance_of: list[str] | None = None,
-) -> DataFrame:
-    """S4/S5: JSON scan with an arrays_overlap predicate, replacing the
-    reference's sequential Wikidata dump filter (``get_events.py:48-70``).
-    Progress metrics come from Spark's task metrics instead of a
-    hand-rolled entities/sec print."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.json(path)
-    if instance_of:
-        targets = F.array(*[F.lit(x) for x in instance_of])
-        df = df.filter(F.arrays_overlap(F.col("instance_of"), targets))
-    return df

@@ -20,7 +20,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -32,6 +32,11 @@ def _needs_hadoop_fs(path: str) -> bool:
     and skip stale-chunk invalidation. Plain local paths keep cheap
     os/shutil calls."""
     return "://" in path
+
+
+def _row_count():
+    """The metric a checkpoint observes on each frame it writes."""
+    return F.count(F.lit(1)).alias("rows")
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -49,6 +54,9 @@ class WarehouseIO:
         self.use_iceberg = catalog is not None and _iceberg_available(spark)
         self.catalog = catalog
         self.remote = _needs_hadoop_fs(base_dir)
+        # stage name -> the Observations on its last checkpoint's writes,
+        # or None when that checkpoint loaded committed rows (rows_written)
+        self._observed: dict[str, list[Observation] | None] = {}
         if self.remote:
             self._fs_mkdirs(base_dir)
         else:
@@ -208,11 +216,6 @@ class WarehouseIO:
         suffix = hashlib.sha256(self.base_dir.encode()).hexdigest()[:12]
         return f"{name}_wh{suffix}"
 
-    def load_bucketed(self, name: str) -> DataFrame:
-        """Read a bucketed table back *as* a bucketed table (the plain
-        parquet path would lose the bucket metadata and re-shuffle)."""
-        return self.spark.table(self._bucketed_table_name(name))
-
     @staticmethod
     def _chunk_key_desc(chunk_expr) -> str:
         """Stable serialization of the chunking key for the resume
@@ -273,18 +276,42 @@ class WarehouseIO:
             self._fs_rmtree(base)
             self._fs_mkdirs(base)
             self._fs_write_text(marker, chunk_desc)
-        stamped = df.withColumn("_lineage_stage", F.lit(name)).withColumn(
-            "_lineage_part", F.spark_partition_id()
-        )
         chunk_dirs = [os.path.join(base, f"chunk={i}") for i in range(n_chunks)]
+        written: list[Observation] = []
+        loaded = False
         for i, sub in enumerate(chunk_dirs):
             if resume and self._fs_exists(os.path.join(sub, "_SUCCESS")):
+                loaded = True
                 continue
-            stamped.filter(chunk_expr == i).write.mode("overwrite").parquet(sub)
+            # the chunk filter goes first so it reaches below the
+            # upstream work: the row-count observation and the
+            # non-deterministic lineage column both stop filter pushdown,
+            # and above either one every chunk pass computed the whole
+            # stage
+            obs = Observation()
+            written.append(obs)
+            df.filter(chunk_expr == i).observe(obs, _row_count()).withColumn(
+                "_lineage_stage", F.lit(name)
+            ).withColumn("_lineage_part", F.spark_partition_id()).write.mode(
+                "overwrite"
+            ).parquet(sub)
+        self._observed[name] = None if loaded else written
         # read back ONLY the expected chunk dirs (never `base` wholesale:
         # a resumed run must not pick up stale extra chunk=* dirs)
         out = self.spark.read.option("basePath", base).parquet(*chunk_dirs)
         return out.drop("chunk", "_lineage_stage", "_lineage_part")
+
+    def rows_written(self, name: str) -> int:
+        """Rows the last ``checkpoint``/``checkpoint_chunked`` of
+        ``name`` wrote, read from Observations on the written frames (no
+        extra Spark job). -1 when that checkpoint loaded any committed
+        rows instead of writing them (a resumed stage), or never ran:
+        ``Observation.get`` waits for an action on the observed frame,
+        so it is never asked about a write that did not happen."""
+        written = self._observed.get(name)
+        if written is None:
+            return -1
+        return sum(obs.get["rows"] for obs in written)
 
     def checkpoint(self, df: DataFrame, name: str, resume: bool = False) -> DataFrame:
         """Write-through checkpoint: reuse a committed table when
@@ -298,8 +325,11 @@ class WarehouseIO:
         schema equals ``load_clean(name).schema``. The resume and
         Iceberg paths read through ``load_clean``."""
         if resume and self.exists(name):
+            self._observed[name] = None
             return self.load_clean(name)
-        self.save(df, name)
+        obs = Observation()
+        self.save(df.observe(obs, _row_count()), name)
+        self._observed[name] = [obs]
         if self.use_iceberg:
             return self.load_clean(name)
         return self.spark.read.schema(df.schema).parquet(self._path(name))

@@ -287,12 +287,16 @@ def test_pair_snr_udf(spark):
 
 
 def test_fused_sig_landmark_udf_parity(spark):
-    """The fused one-payload-pass UDF must be bit-identical to the two
-    separate UDFs it replaces (pipeline uses it when the offset tier
-    is on)."""
+    """The one-payload-pass UDF (the pipeline's, and the standalone
+    offset tier's) must be bit-identical to the numpy references: the
+    SimHash of ``spectral_fingerprint`` at ``fft_hop`` and the
+    ``audio_landmarks`` set at ``fft_hop // 2``."""
     from sems_event_deduplication_spark.functions.audio import (
-        make_audio_landmark_udf,
+        _projection,
+        audio_landmarks,
         make_audio_sig_landmark_udf,
+        pack_bits_to_words,
+        spectral_fingerprint,
     )
 
     rng = _rng()
@@ -302,37 +306,36 @@ def test_fused_sig_landmark_udf_parity(spark):
         codec = "pcm_s16le" if i % 2 == 0 else "pcm_f32le"
         rows.append((str(i), _encode(pcm, codec), codec))
     rows.append(("empty", b"", "pcm_s16le"))
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["id", "buf", "codec"])
-    )
+    pdf = pd.DataFrame(rows, columns=["id", "buf", "codec"])
 
-    sim_udf = make_audio_simhash_udf(
-        CFG.fft_frame, CFG.fft_hop, CFG.n_mel_bands, CFG.simhash_bits, CFG.seed
-    )
-    lm_udf = make_audio_landmark_udf(CFG.fft_frame, CFG.fft_hop // 2)
+    proj = _projection(CFG.n_mel_bands, CFG.simhash_bits, CFG.seed)
+    want = {}
+    for cid, buf, codec in rows:
+        if not buf:
+            want[cid] = ([0] * (CFG.simhash_bits // 64), [])
+            continue
+        pcm = decode_pcm(buf, codec)
+        fp = spectral_fingerprint(pcm, CFG.fft_frame, CFG.fft_hop, CFG.n_mel_bands)
+        want[cid] = (
+            pack_bits_to_words((proj @ fp) > 0, CFG.simhash_bits),
+            [int(v) for v in audio_landmarks(pcm, CFG.fft_frame, CFG.fft_hop // 2)],
+        )
+
     fused_udf = make_audio_sig_landmark_udf(
         CFG.fft_frame, CFG.fft_hop, CFG.n_mel_bands, CFG.simhash_bits,
         CFG.seed, CFG.fft_hop // 2,
     )
-
-    sep = {
-        r["id"]: (r["s"], r["lm"])
-        for r in df.select(
-            "id",
-            sim_udf("buf", "codec").alias("s"),
-            lm_udf("buf", "codec").alias("lm"),
-        ).collect()
-    }
     fused = {
         r["id"]: (r["a"]["audio_simhash"], r["a"]["landmarks"])
-        for r in df.select(
+        for r in spark.createDataFrame(pdf).select(
             "id", fused_udf("buf", "codec").alias("a")
         ).collect()
     }
-    assert sep.keys() == fused.keys()
-    for k in sep:
-        assert sep[k][0] == fused[k][0], f"simhash differs for {k}"
-        assert sep[k][1] == fused[k][1], f"landmarks differ for {k}"
+    assert fused.keys() == want.keys()
+    assert any(lm for _, lm in want.values())
+    for k in want:
+        assert fused[k][0] == want[k][0], f"simhash differs for {k}"
+        assert fused[k][1] == want[k][1], f"landmarks differ for {k}"
 
 
 def test_stft_stride_identity():

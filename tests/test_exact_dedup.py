@@ -1,4 +1,9 @@
-"""keep-last exact dedup parity vs pandas (reference create_silver_label.py:67)."""
+"""keep-last exact dedup parity vs pandas (reference create_silver_label.py:67).
+
+Every case runs the three steps the pipeline composes: digest keys ->
+``digest_rank_edges`` -> ``kept_from_edges`` against a materialized
+edge table.
+"""
 
 from __future__ import annotations
 
@@ -6,9 +11,19 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from sems_event_deduplication_spark.operators.exact_dedup import (
-    dedup_keep_last,
-    exact_dedup_with_edges,
+    digest_rank_edges,
+    exact_dedup_digest_keys,
+    kept_from_edges,
 )
+
+
+def exact_dedup(df, strategy="auto", max_broadcast_ids=20_000_000, algo="xxh128"):
+    """(keepers, edges) of ``df`` (clip_id, transcript_norm, bytes), the
+    way the pipeline derives them; the edge table is materialized
+    because ``auto`` counts it."""
+    keys, digests = exact_dedup_digest_keys("transcript_norm", "bytes", algo)
+    edges = digest_rank_edges(df.select("clip_id", *digests), keys).localCheckpoint()
+    return kept_from_edges(df, edges, "clip_id", strategy, max_broadcast_ids), edges
 
 
 def test_keep_last_matches_pandas(spark):
@@ -20,7 +35,9 @@ def test_keep_last_matches_pandas(spark):
         }
     )
     want = pdf.sort_values("ord").drop_duplicates(subset="k", keep="last")
-    got = dedup_keep_last(spark.createDataFrame(pdf), ["k"], "ord").toPandas()
+    df = spark.createDataFrame(pdf)
+    edges = digest_rank_edges(df, ["k"], id_col="v", order_col="ord")
+    got = kept_from_edges(df, edges.localCheckpoint(), "v").toPandas()
     assert sorted(got["v"]) == sorted(want["v"])
 
 
@@ -32,7 +49,7 @@ def test_exact_dedup_edges_connect_drops_to_keeper(spark):
             "bytes": [b"x", b"x", b"x", b"y"],
         }
     )
-    kept, edges = exact_dedup_with_edges(spark.createDataFrame(pdf))
+    kept, edges = exact_dedup(spark.createDataFrame(pdf))
     kept_ids = {r["clip_id"] for r in kept.select("clip_id").collect()}
     assert kept_ids == {"c3", "c4"}  # keep-last by clip_id desc
     e = {(r["id_a"], r["id_b"]) for r in edges.collect()}
@@ -53,7 +70,7 @@ def test_exact_dedup_strategies_agree_and_plan_shapes(spark):
     df = spark.createDataFrame(pdf)
     results = {}
     for strat in ("anti_broadcast", "semi_broadcast", "shuffle", "auto"):
-        kept, edges = exact_dedup_with_edges(df, strategy=strat)
+        kept, edges = exact_dedup(df, strategy=strat)
         results[strat] = (
             {r["clip_id"] for r in kept.collect()},
             {(r["id_a"], r["id_b"]) for r in edges.collect()},
@@ -64,7 +81,7 @@ def test_exact_dedup_strategies_agree_and_plan_shapes(spark):
     base = results["anti_broadcast"]
     assert all(v == base for v in results.values())
     # auto with a zero threshold must take the shuffle branch
-    kept_big, _ = exact_dedup_with_edges(df, strategy="auto", max_broadcast_ids=0)
+    kept_big, _ = exact_dedup(df, strategy="auto", max_broadcast_ids=0)
     assert {r["clip_id"] for r in kept_big.collect()} == base[0]
 
 
@@ -78,7 +95,7 @@ def test_exact_dedup_anti_broadcast_payload_never_shuffles(spark):
             "bytes": [b"x", b"x", b"z"],
         }
     )
-    kept, _ = exact_dedup_with_edges(spark.createDataFrame(pdf))
+    kept, _ = exact_dedup(spark.createDataFrame(pdf))
     kept.collect()  # AQE: the final plan exists only after execution
     plan = kept._jdf.queryExecution().executedPlan().toString()
     anti = plan[plan.index("BroadcastHashJoin") :]
@@ -94,7 +111,7 @@ def test_exact_dedup_distinguishes_payloads(spark):
             "bytes": [b"x", b"DIFFERENT"],
         }
     )
-    kept, edges = exact_dedup_with_edges(spark.createDataFrame(pdf))
+    kept, edges = exact_dedup(spark.createDataFrame(pdf))
     assert kept.count() == 2 and edges.count() == 0
 
 
@@ -112,7 +129,7 @@ def test_digest_algos_agree(spark):
     df = spark.createDataFrame(pd.DataFrame(rows))
     out = {}
     for algo in ("xxh128", "sha256"):
-        kept, edges = exact_dedup_with_edges(df, algo=algo)
+        kept, edges = exact_dedup(df, algo=algo)
         out[algo] = (
             sorted(r["clip_id"] for r in kept.select("clip_id").collect()),
             sorted(map(tuple, edges.collect())),
@@ -128,12 +145,6 @@ def test_xxh128_second_word_is_salt_prefixed(spark):
     word2 a pure function of word1 = xxhash64(col), silently reducing
     the key to 64 bits. Guard the salt-prefix ordering structurally
     and behaviorally."""
-    from pyspark.sql import functions as F
-
-    from sems_event_deduplication_spark.operators.exact_dedup import (
-        exact_dedup_digest_keys,
-    )
-
     names, digests = exact_dedup_digest_keys("t", "p")
     # structural: the salt literal precedes the content column
     for d in (digests[1], digests[3]):

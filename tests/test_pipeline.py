@@ -19,6 +19,15 @@ from sems_event_deduplication_spark.synth import AUDIO_CLIPS_SCHEMA, make_corpus
 from oracle_utils import intra_pairs, oracle_components
 
 CFG = DedupConfig()
+# the stages a run commits to the warehouse
+COMMITTED = {
+    "signatures", "exact_edges", "verified_pairs",
+    "components", "survivors", "clusters",
+}
+
+
+def _written_rows(res) -> dict:
+    return {m.stage: m.rows_out for m in res.metrics if m.stage in COMMITTED}
 
 
 @pytest.fixture(scope="module")
@@ -94,8 +103,7 @@ def test_resume_idempotent(spark, corpus):
     r1 = pipe.run(corpus, with_audio=True)
     want = {frozenset(r["member_ids"]) for r in r1.clusters.collect()}
     # simulate a crash after the signatures stage: later tables vanish
-    for stage in ("candidates", "verified_pairs",
-                  "components", "survivors", "clusters"):
+    for stage in ("verified_pairs", "components", "survivors", "clusters"):
         wh.drop(stage)
     r2 = pipe.run(corpus, resume=True, with_audio=True)
     got = {frozenset(r["member_ids"]) for r in r2.clusters.collect()}
@@ -105,7 +113,7 @@ def test_resume_idempotent(spark, corpus):
 def test_metrics_emitted(result, corpus_pdf):
     res, _, _ = result
     stages = {m.stage for m in res.metrics}
-    assert {"normalized", "signatures", "verified_pairs", "components"} <= stages
+    assert {"signatures", "exact_edges", "verified_pairs", "components"} <= stages
     assert all(m.seconds >= 0 for m in res.metrics)
 
 
@@ -145,14 +153,22 @@ def test_chunked_signature_commits(spark, corpus):
     """S8 mid-stage commits wired into the pipeline: the signatures
     stage lands as independently committed chunk partitions, results
     match the unchunked run, and a rerun with two chunk commits wiped
-    recomputes just those chunks and converges to the same clusters."""
+    recomputes just those chunks and converges to the same clusters.
+    Every stage's rows_out counts its table (chunks: every chunk write);
+    a stage resumed from committed rows reports -1, and a full resume,
+    which writes nothing, returns instead of waiting on an observation
+    no action will fill."""
     import os
     import tempfile
+    import threading
     from dataclasses import replace
 
     cfg_c = replace(CFG, signature_chunks=4)
     wh = WarehouseIO(spark, tempfile.mkdtemp(prefix="wh_chunk_"))
     res = DedupPipeline(spark, cfg_c, wh).run(corpus, with_audio=True)
+    assert _written_rows(res) == {
+        name: wh.load_clean(name).count() for name in COMMITTED
+    }
     base = wh.base_dir + "/signatures"
     chunks = sorted(d for d in os.listdir(base) if d.startswith("chunk="))
     assert len(chunks) == 4
@@ -174,6 +190,20 @@ def test_chunked_signature_commits(spark, corpus):
         os.remove(f"{base}/{c}/_SUCCESS")
     res3 = DedupPipeline(spark, cfg_c, wh).run(corpus, resume=True, with_audio=True)
     assert cm(res3) == cm(res2)
+    assert _written_rows(res3) == dict.fromkeys(COMMITTED, -1)
+
+    resumed = []
+    t = threading.Thread(
+        target=lambda: resumed.append(
+            DedupPipeline(spark, cfg_c, wh).run(corpus, resume=True)
+        ),
+        daemon=True,
+    )
+    t.start()
+    t.join(timeout=600)
+    assert not t.is_alive(), "full resume did not return"
+    assert cm(resumed[0]) == cm(res2)
+    assert _written_rows(resumed[0]) == dict.fromkeys(COMMITTED, -1)
 
 
 def test_boilerplate_mega_bucket_star_cap(spark):
@@ -577,9 +607,8 @@ class _RecordingWarehouse(WarehouseIO):
 
 @pytest.fixture(scope="module")
 def offset_run(spark):
-    """A with_offset_audio run in checkpoint_mode='all' (every stage,
-    the flagged ``candidates`` table included, goes through
-    ``WarehouseIO.checkpoint``)."""
+    """A with_offset_audio run; every committed stage goes through
+    ``WarehouseIO.checkpoint``."""
     from sems_event_deduplication_spark.synth import make_corpus_dist
 
     clips = make_corpus_dist(
@@ -668,21 +697,32 @@ def test_checkpoint_schema_equals_load_clean(offset_run):
     """Every committed stage reads back with the schema written, which
     is the schema an inferring ``load_clean`` sees."""
     _, wh, _ = offset_run
-    assert {"candidates", "verified_pairs", "signatures", "clusters"} <= set(
-        wh.returned
-    )
+    assert {"verified_pairs", "signatures", "clusters"} <= set(wh.returned)
     for name, df in wh.returned.items():
         assert df.schema == wh.load_clean(name).schema, name
 
 
 def test_min_mode_job_budget(spark, corpus, count_jobs):
-    """The flagship shape (checkpoint_mode='min') stays on its job
-    floor: one verify pass and schema-supplied checkpoint read-backs
-    keep a run of the test corpus at 24 Spark jobs (38 with a verify
-    pass per tier and an inferring read-back per stage)."""
+    """A run with no mode argument (the one checkpoint layout) stays on
+    its job floor: one verify pass and schema-supplied checkpoint
+    read-backs keep a run of the test corpus at 24 Spark jobs (38 with a
+    verify pass per tier and an inferring read-back per stage). Each
+    committed stage's rows_out, read from an Observation on its write
+    rather than a count job, equals its table's rows."""
     corpus.count()  # the cached corpus materializes outside the count
     wh = WarehouseIO(spark, tempfile.mkdtemp(prefix="wh_jobs_"))
-    n = count_jobs(lambda: DedupPipeline(spark, CFG, wh).run(
-        corpus, with_audio=True, checkpoint_mode="min"
+    runs = []
+    n = count_jobs(lambda: runs.append(
+        DedupPipeline(spark, CFG, wh).run(corpus, with_audio=True)
     ))
     assert n <= 24, n
+    rows = _written_rows(runs[0])
+    assert rows == {name: wh.load_clean(name).count() for name in COMMITTED}
+    assert min(rows.values()) > 0, rows
+
+
+def test_checkpoint_mode_all_rejected(spark, corpus):
+    """The staged layout is gone; asking for it fails loudly."""
+    pipe = DedupPipeline(spark, CFG, WarehouseIO(spark, tempfile.mkdtemp()))
+    with pytest.raises(ValueError, match="'all'"):
+        pipe.run(corpus, checkpoint_mode="all")

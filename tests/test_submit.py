@@ -31,7 +31,7 @@ def test_spark_submit_py_files_package(tmp_path):
             "--py-files", pkg_zip,
             os.path.join(REPO, "scripts", "run_pipeline.py"),
             "--synth", "120", "--warehouse", str(tmp_path / "wh"),
-            "--checkpoint-mode", "min", "--cores", "4",
+            "--cores", "4",
         ],
         capture_output=True, text=True, timeout=480, env=env,
         cwd=str(tmp_path),  # NOT the repo root: the zip must supply the package

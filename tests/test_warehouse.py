@@ -227,3 +227,35 @@ def test_checkpoint_read_back_launches_no_job(spark, tmp_path, count_jobs):
     assert count_jobs(run) == n_save
     assert out.schema == wh.load_clean("checkpointed").schema
     assert sorted(out.collect()) == sorted(df.collect())
+
+
+def test_rows_written_from_observations(spark, tmp_path, count_jobs):
+    """Each checkpoint reports the rows it wrote, read from an
+    Observation on the write (no extra job); one that loaded committed
+    rows, or never ran, reports -1. Chunk writes are observed after the
+    chunk filter, which still reaches below the upstream work: every
+    row is computed once, not once per chunk."""
+    wh = WarehouseIO(spark, str(tmp_path))
+    assert wh.rows_written("never") == -1
+    df = _df(spark, 60)
+    n_save = count_jobs(lambda: wh.save(df, "saved"))
+    assert count_jobs(lambda: (wh.checkpoint(df, "t"), wh.rows_written("t"))) == n_save
+    assert wh.rows_written("t") == 60
+    wh.checkpoint(df, "t", resume=True)
+    assert wh.rows_written("t") == -1
+    wh.checkpoint(df.limit(0), "empty")
+    assert wh.rows_written("empty") == 0
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def tag(clip_id):
+        calls.add(1)
+        return clip_id
+
+    signed = df.withColumn("sig", F.udf(tag, "string")("clip_id"))
+    wh.checkpoint_chunked(signed, "c", "clip_id", n_chunks=4)
+    assert wh.rows_written("c") == 60
+    assert calls.value == 60
+    os.remove(os.path.join(str(tmp_path), "c", "chunk=1", "_SUCCESS"))
+    wh.checkpoint_chunked(signed, "c", "clip_id", n_chunks=4, resume=True)
+    assert wh.rows_written("c") == -1  # three chunks were loaded
