@@ -8,17 +8,34 @@ repeated, and explained without touching the frozen harness:
   python bench_extra.py --audio [n]            # audio pipeline, labeled stages
   python bench_extra.py --text [n]             # text e2e repeats
   python bench_extra.py --explain              # write plans/r06/*_{when}.txt
+  python bench_extra.py --pair <base-ref> [--workload W] [--seed S] [--pairs N]
+                                               # paired A/B of perfbench runs
 
 Timing uses the same shapes as bench.py (toPandas for contract queries,
 pipeline wall for audio). Per-layer and per-stage pipeline numbers come
 from ``perfbench/run.py --trace 1``.
+
+``--pair`` extracts ``<base-ref>`` with ``git archive`` into a temporary
+directory and runs the benchmark declared in ``BENCHMARK.json``
+untraced, alternately in that tree and in this checkout (one Spark
+process at a time, the side that goes first alternating per pair, each
+run with its own cwd and ``PYTHONPATH``). It prints, per workload and
+end-to-end metric, each side's median and quartiles, the change's wins,
+whether the median gap exceeds the base's interquartile range, whether
+the change is worse than the metric's bound, and failed or incorrect
+runs.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import shutil
+import statistics
+import subprocess
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -107,7 +124,138 @@ def run_text(reps: int = 2) -> dict:
     return {"text_dedup_e2e": times}
 
 
+def _perfbench(bench: dict, tree: str, workload: str, seed: int) -> dict:
+    """One untraced benchmark run in ``tree``: its result JSON, or a
+    failed run when it printed none."""
+    cmd = bench["command"] + [
+        "--workload", workload, "--seed", str(seed),
+        "--seconds", str(bench["run_seconds"]), "--trace", "0",
+    ]
+    proc = subprocess.run(
+        cmd, cwd=tree, env={**os.environ, "PYTHONPATH": tree},
+        capture_output=True, text=True,
+    )
+    try:
+        return json.loads(proc.stdout.strip().splitlines()[-1])
+    except (IndexError, json.JSONDecodeError):
+        return {"correct": False, "attempted": 1, "failed": 1, "metrics": {}}
+
+
+def _quartiles(xs: list[float]) -> tuple[float, float, float]:
+    if len(xs) == 1:
+        return xs[0], xs[0], xs[0]
+    q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, med, q3
+
+
+def summarize_pairs(runs: dict, end_to_end: list[dict]) -> list[dict]:
+    """One row per end-to-end metric from one workload's paired runs.
+
+    ``runs`` is ``{"base": [result, ...], "change": [result, ...]}`` in
+    pair order, each result a benchmark result JSON. A pair counts as a
+    win when the change reads better on it (ties count for neither).
+    ``verdict`` is "worse" when the change's median is worse than the
+    base's by more than the metric's bound, else "unresolved" when
+    either side's interquartile range exceeds the bound (relative to its
+    median) and not every change run beats every base run, else
+    "within bound"."""
+    bad = {
+        side: sum(1 for r in rs if not r.get("correct") or r.get("failed", 0))
+        for side, rs in runs.items()
+    }
+    rows = []
+    for m in end_to_end:
+        name, sign = m["name"], 1 if m["better"] == "higher" else -1
+        vals = {
+            side: [r["metrics"].get(name, {}).get("value") for r in rs]
+            for side, rs in runs.items()
+        }
+        pairs = [
+            (b, c) for b, c in zip(vals["base"], vals["change"])
+            if b is not None and c is not None
+        ]
+        if not pairs:
+            continue
+        base = [v for v in vals["base"] if v is not None]
+        change = [v for v in vals["change"] if v is not None]
+        bq, cq = _quartiles(base), _quartiles(change)
+        rel = sign * (cq[1] - bq[1]) / (abs(bq[1]) or 1.0)
+        spread = max((q[2] - q[0]) / (abs(q[1]) or 1.0) for q in (bq, cq))
+        all_better = min(sign * c for c in change) > max(sign * b for b in base)
+        if rel < -m["bound"]:
+            verdict = "worse"
+        elif spread > m["bound"] and not all_better:
+            verdict = "unresolved"
+        else:
+            verdict = "within bound"
+        rows.append({
+            "metric": name, "better": m["better"], "bound": m["bound"],
+            "base": bq, "change": cq,
+            "wins": sum(1 for b, c in pairs if sign * (c - b) > 0),
+            "pairs": len(pairs),
+            "gap_exceeds_base_iqr": abs(cq[1] - bq[1]) > bq[2] - bq[0],
+            "worse_than_bound": rel < -m["bound"],
+            "verdict": verdict,
+            "bad_runs": bad,
+        })
+    return rows
+
+
+def format_pair_rows(workload: str, rows: list[dict]) -> list[str]:
+    def q(t):
+        return f"{t[1]:.4g} ({t[0]:.4g}-{t[2]:.4g})"
+
+    return [
+        f"{workload} {r['metric']} [{r['better']}, bound {r['bound']}]: "
+        f"base {q(r['base'])} | change {q(r['change'])} | "
+        f"wins {r['wins']}/{r['pairs']} | "
+        f"gap > base IQR: {'yes' if r['gap_exceeds_base_iqr'] else 'no'} | "
+        f"worse than bound: {'yes' if r['worse_than_bound'] else 'no'} | "
+        f"{r['verdict']} | failed or incorrect runs: "
+        f"base {r['bad_runs']['base']}, change {r['bad_runs']['change']}"
+        for r in rows
+    ]
+
+
+def run_pair(base_ref: str, workloads: list[str], seed: int, pairs: int) -> dict:
+    with open(os.path.join(REPO, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    base_tree = tempfile.mkdtemp(prefix="ab_base_")
+    try:
+        archive = subprocess.run(
+            ["git", "archive", base_ref], cwd=REPO, capture_output=True, check=True
+        )
+        subprocess.run(
+            ["tar", "-x", "-C", base_tree], input=archive.stdout, check=True
+        )
+        trees = {"base": base_tree, "change": REPO}
+        out = {}
+        for w in workloads:
+            runs: dict = {"base": [], "change": []}
+            for i in range(pairs):
+                order = ("base", "change") if i % 2 == 0 else ("change", "base")
+                for side in order:
+                    runs[side].append(_perfbench(bench, trees[side], w, seed))
+            out[w] = runs
+            for line in format_pair_rows(w, summarize_pairs(runs, bench["end_to_end"])):
+                print(line, flush=True)
+        return out
+    finally:
+        shutil.rmtree(base_tree, ignore_errors=True)
+
+
 def main():
+    if "--pair" in sys.argv:
+        ap = argparse.ArgumentParser(description="paired A/B of perfbench runs")
+        ap.add_argument("--pair", required=True, metavar="BASE_REF")
+        ap.add_argument("--workload", action="append",
+                        choices=["audio_batch", "daily_ingest"])
+        ap.add_argument("--seed", type=int, default=1)
+        ap.add_argument("--pairs", type=int, default=5)
+        args = ap.parse_args()
+        workloads = args.workload or ["audio_batch", "daily_ingest"]
+        print(json.dumps(run_pair(args.pair, workloads, args.seed, args.pairs)))
+        return
     if "--contract" in sys.argv:
         i = sys.argv.index("--contract")
         names = [a for a in sys.argv[i + 1 :] if not a.startswith("-")] or CONTRACT_QUERIES
@@ -131,7 +279,7 @@ def main():
         reps = int(sys.argv[i + 1]) if len(sys.argv) > i + 1 and sys.argv[i + 1].isdigit() else 2
         print(json.dumps(run_text(reps)))
         return
-    print("usage: bench_extra.py --contract|--explain|--audio|--text")
+    print("usage: bench_extra.py --contract|--explain|--audio|--text|--pair")
 
 
 if __name__ == "__main__":

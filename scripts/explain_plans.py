@@ -101,7 +101,7 @@ def main() -> None:
         )
     )
 
-    # --- bucketed payload re-attach (the strategy="shuffle" branch at
+    # --- bucketed payload re-attach (the `auto` gate above the cap, at
     # a scale where no id set broadcasts: both tables bucketed on the
     # join key => SortMergeJoin with NO Exchange on either side) -------
     from sems_event_deduplication_spark.sources.warehouse import WarehouseIO
@@ -325,7 +325,7 @@ def main() -> None:
             "only the narrow (clip_id, digest) projection of the checkpointed "
             "output",
         ]),
-        ("bucketed payload re-attach (exact-dedup strategy='shuffle' at scale)", bucketed_plan, [
+        ("bucketed payload re-attach (exact-dedup `auto` above the cap, at scale)", bucketed_plan, [
             "both sides are tables bucketed by clip_id (`WarehouseIO.save_bucketed`): "
             "the anti-join plans as SortMergeJoin with **zero Exchange operators** — "
             "neither the payload nor the dropped-id set shuffles "

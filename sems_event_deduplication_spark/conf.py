@@ -82,20 +82,18 @@ class DedupConfig:
 
     # --- exact-dedup payload re-attach (operators/exact_dedup.py) ----
     exact_dedup_strategy: str = "auto"
-                                  # auto (default): count the dropped ids
-                                  #   (one narrow job) and broadcast them
-                                  #   only under the cap — safe at any dup
-                                  #   rate, incl. boilerplate mega-dup
-                                  #   corpora where the dropped set itself
-                                  #   outgrows the driver
-                                  # anti_broadcast: always broadcast the
-                                  #   dropped-id set + left_anti (skip the
-                                  #   count when the dup rate is known low)
-                                  # semi_broadcast: broadcast keepers (only
-                                  #   when dup rate is huge)
-                                  # shuffle: no broadcast — pair with tables
-                                  #   bucketed on clip_id for a zero-Exchange
-                                  #   join (WarehouseIO.save_bucketed)
+                                  # the only value: broadcast the dropped
+                                  # ids to the keeper anti-join when there
+                                  # are at most exact_dedup_max_broadcast_ids
+                                  # of them (counted by the exact_edges
+                                  # write), else a plain left_anti — safe
+                                  # at any dup rate, incl. boilerplate
+                                  # mega-dup corpora where the dropped set
+                                  # itself outgrows the driver. Set the
+                                  # cap to 0 for tables bucketed on
+                                  # clip_id (WarehouseIO.save_bucketed):
+                                  # the plain join then runs with zero
+                                  # Exchanges
     exact_dedup_max_broadcast_ids: int = 20_000_000
     exact_digest_algo: str = "xxh128"
                                   # xxh128 (default): 2 xxhash64 words
@@ -196,19 +194,11 @@ class DedupConfig:
                                   # where the edge list can approach
                                   # corpus size). 0 disables.
 
-    # --- temporal semantics (reference create_silver_label.py:78,236,380) ---
-    temporal_eps_days: int = 1        # 1-D DBSCAN eps
-    temporal_min_samples: int = 3     # 1-D DBSCAN min_samples
-    merge_max_gap_days: int = 10      # cluster-merge temporal gate
-    merge_entity_overlap: float = 0.5 # entity overlap >= 0.5 (max-denominator)
-    merge_entity_min_count: int = 4   # entity mentioned > 4x per cluster
-
     # --- determinism ------------------------------------------------
     seed: int = 42
 
     # --- spark knobs -------------------------------------------------
     shuffle_partitions: int = 32
-    arrow_max_records: int = 10_000
 
     def __post_init__(self):
         if self.bands * self.rows_per_band != self.num_perm:
@@ -229,6 +219,11 @@ class DedupConfig:
             raise ValueError(
                 f"signature_scan_mode must be 'fused' or 'dedup_first', "
                 f"got {self.signature_scan_mode!r}"
+            )
+        if self.exact_dedup_strategy != "auto":
+            raise ValueError(
+                f"exact_dedup_strategy must be 'auto', "
+                f"got {self.exact_dedup_strategy!r}"
             )
         if self.exact_digest_algo not in ("xxh128", "sha256"):
             raise ValueError(

@@ -52,65 +52,47 @@ def digest_rank_edges(
     )
 
 
-def resolve_dedup_strategy(
-    strategy: str, dropped_ids: DataFrame, max_broadcast_ids: int
-) -> str:
-    """'auto' -> count the dropped ids and pick anti_broadcast vs
-    shuffle at the cap. Callers must hand in a MATERIALIZED dropped-id
-    frame (checkpointed edges / warehouse table) — counting a lazy
-    frame would re-run its whole lineage."""
-    if strategy != "auto":
-        return strategy
-    n = dropped_ids.count()
-    return "anti_broadcast" if n <= max_broadcast_ids else "shuffle"
-
-
 def kept_from_edges(
     df: DataFrame,
     edges: DataFrame,
     id_col: str = "clip_id",
     strategy: str = "auto",
     max_broadcast_ids: int = 20_000_000,
+    n_dropped: int = -1,
 ) -> DataFrame:
-    """Keeper rows of ``df`` given a MATERIALIZED edge table (e.g. a
-    warehouse checkpoint): resolve the re-attach strategy (auto counts
-    the cheap materialized table, never the payload lineage) and apply
-    the corresponding join. Shared by both pipeline scan modes.
+    """Keeper rows of ``df``: a ``left_anti`` join against the dropped
+    ids (``edges.id_b``) of a MATERIALIZED edge table (e.g. a warehouse
+    checkpoint). Shared by both pipeline scan modes.
 
     The dropped rows still belong in the final clusters: the edges feed
     connected components so exact dups re-attach to their keeper's
-    component. Payload rows re-attach via an id join picked by
-    ``strategy``:
+    component. The ``auto`` gate (the only ``strategy``) picks the join:
 
-    - ``anti_broadcast``: broadcast the **dropped**-id set and
-      ``left_anti``-join the payload table against it. The dropped set
-      is exactly what dedup removes — at a realistic dup rate a small
-      fraction of the corpus, unlike the keeper set (≈ all rows), so
-      the broadcast stays driver-safe even at 10⁹+ input rows.
-    - ``semi_broadcast``: broadcast the keeper ids + ``left_semi`` —
-      right only when the dup rate is huge (keepers ≪ dropped).
-    - ``shuffle``: plain ``left_anti`` with no broadcast hint — the
-      fallback when *both* id sets outgrow the driver; on a real
-      cluster pair it with tables bucketed by ``id_col``
-      (``WarehouseIO.save_bucketed``) so neither side exchanges.
-    - ``auto`` (default): count the dropped ids (one cheap narrow job)
-      and pick ``anti_broadcast`` vs ``shuffle`` at
-      ``max_broadcast_ids`` — the only mode safe at ANY dup rate.
+    - at most ``max_broadcast_ids`` dropped ids: broadcast them. The
+      dropped set is exactly what dedup removes — at a realistic dup
+      rate a small fraction of the corpus, unlike the keeper set (≈ all
+      rows) — and the payload side of the join never exchanges. The
+      hint is explicit because AQE materializes both shuffle sides
+      before converting a sort-merge join, which would exchange the
+      payload.
+    - above the cap: plain ``left_anti`` with no hint, so an
+      arbitrarily large dropped set (a boilerplate mega-dup corpus) is
+      never forced onto the driver; on a real cluster pair it with
+      tables bucketed by ``id_col`` (``WarehouseIO.save_bucketed``) so
+      neither side exchanges.
 
-    The broadcast hint is explicit because AQE materializes both
-    shuffle sides before converting a sort-merge join, which would
-    exchange the payload; an unconditional keeper broadcast would be a
-    driver bomb at scale (keepers ≈ all unique rows)."""
+    ``n_dropped`` is the edge table's row count when the caller already
+    has it (the pipeline passes ``WarehouseIO.rows_written``); when it
+    is -1 the gate counts the table, one narrow job. The count decides
+    only the join shape, never the result."""
+    if strategy != "auto":
+        raise ValueError(f"exact-dedup strategy must be 'auto', got {strategy!r}")
     dropped_ids = edges.select(F.col("id_b").alias(id_col))
-    strategy = resolve_dedup_strategy(strategy, dropped_ids, max_broadcast_ids)
-    if strategy == "anti_broadcast":
-        return df.join(F.broadcast(dropped_ids), id_col, "left_anti")
-    if strategy == "semi_broadcast":
-        keep_ids = df.select(id_col).join(dropped_ids, id_col, "left_anti")
-        return df.join(F.broadcast(keep_ids), id_col, "left_semi")
-    if strategy == "shuffle":
-        return df.join(dropped_ids, id_col, "left_anti")
-    raise ValueError(f"unknown exact-dedup strategy: {strategy!r}")
+    if n_dropped < 0:
+        n_dropped = dropped_ids.count()
+    if n_dropped <= max_broadcast_ids:
+        dropped_ids = F.broadcast(dropped_ids)
+    return df.join(dropped_ids, id_col, "left_anti")
 
 
 def exact_dedup_digest_keys(

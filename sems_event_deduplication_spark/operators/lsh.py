@@ -23,6 +23,9 @@ Scale design (the part that must survive 10¹² rows):
   map-side partial aggregation collapses most duplicates before the
   shuffle. ``bucket_pairs`` is the per-bucket expansion before that
   groupBy; the pipeline groups it once for every verify tier.
+- The star-cap degradation is reported, not inferred: ``bucket_stats``
+  is one ungrouped aggregate over the sized frame that counts each
+  bucket at its minimum member's row, so it adds no per-bucket groupBy.
 """
 
 from __future__ import annotations
@@ -133,6 +136,25 @@ def candidate_pairs(
     )
 
 
+def _stat_columns(max_bucket_size: int, where=None) -> dict:
+    """The ``bucket_stats`` aggregates over a ``size_buckets`` frame,
+    restricted to the rows ``where`` holds (all rows when None). Each
+    bucket contributes once, at the row of its minimum member."""
+    n = F.col("__bucket_n")
+    first = F.col("clip_id") == F.col("__bucket_min")
+    if where is not None:
+        first = first & where
+    over = first & (n > max_bucket_size)
+    return {
+        "n_buckets": F.count(F.when(first, 1)),
+        "n_star_buckets": F.sum(F.when(over, 1).otherwise(0)),
+        "n_star_members": F.sum(F.when(over, n).otherwise(0)),
+        "n_pairs_not_enumerated": F.sum(
+            F.when(over, (n * (n - 1)) / 2 - (n - 1)).otherwise(0)
+        ).cast("long"),
+    }
+
+
 def bucket_stats(banded: DataFrame, max_bucket_size: int = 256) -> DataFrame:
     """Observability for the star-edge cap: one row of bucket metrics.
 
@@ -141,31 +163,40 @@ def bucket_stats(banded: DataFrame, max_bucket_size: int = 256) -> DataFrame:
     Returns (n_buckets, n_star_buckets, n_star_members,
     n_pairs_not_enumerated) where ``n_pairs_not_enumerated`` counts the
     intra-bucket pairs a capped bucket did NOT emit (m·(m-1)/2 full
-    pairs minus the m-1 star edges). One narrow agg over the already
-    co-partitioned bucket key; cheap enough to run every pipeline run.
+    pairs minus the m-1 star edges).
 
-    Accepts a raw banded frame or a ``size_buckets`` output — with the
-    latter persisted, this is a cache read plus a partial agg (no new
-    exchange: the cached frame is already hash-partitioned on the
-    bucket key).
+    Accepts a raw banded frame (sized here, one window exchange) or a
+    ``size_buckets`` output. Over the latter, persisted, it is a cache
+    read plus one ungrouped partial aggregate: each bucket is counted at
+    the row whose ``clip_id`` is its ``__bucket_min``, with no
+    per-bucket groupBy.
+
+    Precondition: a bucket holds each id at most once (otherwise the
+    minimum member's rows count the bucket more than once). One row per
+    clip per band and landmark sets made unique per clip both meet it.
     """
-    over = F.col("n") > max_bucket_size
-    if "__bucket_n" in banded.columns:
-        sizes = banded.groupBy("band_id", "band_hash").agg(
-            F.first("__bucket_n").alias("n")
-        )
-    else:
-        sizes = banded.groupBy("band_id", "band_hash").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-    return sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(F.when(over, 1).otherwise(0)).alias("n_star_buckets"),
-        F.sum(F.when(over, F.col("n")).otherwise(0)).alias("n_star_members"),
-        F.sum(
-            F.when(
-                over, (F.col("n") * (F.col("n") - 1)) / 2 - (F.col("n") - 1)
-            ).otherwise(0)
-        ).cast("long").alias("n_pairs_not_enumerated"),
+    sized = banded if "__bucket_n" in banded.columns else size_buckets(banded)
+    return sized.agg(
+        *[c.alias(name) for name, c in _stat_columns(max_bucket_size).items()]
     )
 
+
+def bucket_stats_by(
+    sized: DataFrame, max_bucket_size: int, slices: dict
+) -> dict[str, dict[str, int]]:
+    """``bucket_stats`` of several slices of one ``size_buckets`` frame,
+    as ``{slice name: {stat: value}}``, from ONE ungrouped aggregate
+    (``slices`` maps a name to a row filter, or None for every row).
+    Same precondition as ``bucket_stats``."""
+    cols = {
+        kind: _stat_columns(max_bucket_size, where) for kind, where in slices.items()
+    }
+    row = sized.agg(*[
+        c.alias(f"{kind}:{name}")
+        for kind, stats in cols.items()
+        for name, c in stats.items()
+    ]).collect()[0]
+    return {
+        kind: {name: int(row[f"{kind}:{name}"] or 0) for name in stats}
+        for kind, stats in cols.items()
+    }

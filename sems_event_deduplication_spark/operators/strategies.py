@@ -1,6 +1,6 @@
 """Count-gated broadcast hints for cluster-level aggregate joins.
 
-Sibling of ``exact_dedup.resolve_dedup_strategy``: a blind
+Sibling of the ``exact_dedup.kept_from_edges`` gate: a blind
 ``F.broadcast`` on a one-row-per-cluster table is a driver bomb in a
 dedup corpus, where most clusters are singletons and cluster count ~
 row count. The gate materializes the (narrow) aggregate once, counts

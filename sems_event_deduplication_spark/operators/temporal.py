@@ -7,7 +7,7 @@ Reference behaviors re-expressed as pure window SQL (SURVEY.md W2, J2):
   drops outliers, keeps the most-populated temporal segment.
 - ``merge_cluster``'s temporal gate (``create_silver_label.py:358-382``)
   merges two clusters iff their [min_date, max_date] intervals are
-  within ``merge_max_gap_days`` (distance <= 10 covers overlap).
+  within ``max_gap_days`` (distance <= 10 covers overlap).
 
 Exact 1-D DBSCAN parity, no UDF:
   core point  <-> >= min_samples points within +-eps days

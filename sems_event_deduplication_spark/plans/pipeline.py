@@ -11,6 +11,8 @@
       -> verify: ONE pass, every tier's rule     [stage: verified_pairs]
          (Jaccard / contains / Hamming) where
          its flag is set, sides attached once
+      -> star-cap bucket stats: one ungrouped    [inline, lsh_stats]
+         aggregate over the cached band buckets
       -> connected components (star/star)        [stage: components]
       -> clusters + survivors + metrics          [stages: clusters, survivors]
 
@@ -98,11 +100,10 @@ def _estimated_scan_partitions(df: DataFrame, max_partition_bytes: int = 64 << 2
 @dataclass
 class StageMetric:
     """One timed step of a run. ``rows_out`` of a committed stage is the
-    row count of its table, read from an Observation on the write; it
-    is -1 when the stage was loaded from a committed checkpoint on
-    resume (nothing was written, so nothing was counted) and for the
-    timing-only steps that write no table (``exact_auto_count``,
-    ``lsh_stats_collect``). ``cc_fixpoint`` reports its edge count."""
+    row count of its table, read from an Observation on the write; -1
+    means only that the stage was loaded from a committed checkpoint on
+    resume (nothing was written, so nothing was counted).
+    ``cc_fixpoint`` reports its edge count."""
 
     stage: str
     rows_out: int
@@ -302,19 +303,16 @@ class DedupPipeline:
                 digest_rank_edges(sigs_all.select("clip_id", *keys), keys),
                 "exact_edges",
             )
-            # driver-safety gate shared with the dedup_first path: the
-            # committed edge table makes the 'auto' count a cheap
-            # narrow scan, and above the cap the anti-join runs without
-            # a broadcast hint instead of force-broadcasting an
-            # arbitrarily large dropped-id set
-            t_kept = time.monotonic()
+            # driver-safety gate shared with the dedup_first path: above
+            # the cap the anti-join runs without a broadcast hint instead
+            # of force-broadcasting an arbitrarily large dropped-id set.
+            # The write's own row count decides it (a resumed stage has
+            # none, and the gate counts the committed table instead)
             sigs = kept_from_edges(
                 sigs_all, exact_edges, "clip_id",
                 cfg.exact_dedup_strategy, cfg.exact_dedup_max_broadcast_ids,
+                self.wh.rows_written("exact_edges"),
             ).drop(*keys)
-            metrics.append(
-                StageMetric("exact_auto_count", -1, time.monotonic() - t_kept)
-            )
         else:
             # ---- exact dedup on content digests (reference ordering) -----
             # The edge list is staged STRAIGHT to the warehouse — one
@@ -336,13 +334,10 @@ class DedupPipeline:
                 ),
                 "exact_edges",
             )
-            t_kept = time.monotonic()
             exact = kept_from_edges(
                 normalized, exact_edges, "clip_id",
                 cfg.exact_dedup_strategy, cfg.exact_dedup_max_broadcast_ids,
-            )
-            metrics.append(
-                StageMetric("exact_auto_count", -1, time.monotonic() - t_kept)
+                self.wh.rows_written("exact_edges"),
             )
 
             # ---- signatures (payload dropped after this stage) -----------
@@ -364,7 +359,7 @@ class DedupPipeline:
         # ---- LSH candidates ------------------------------------------------
         # The band-bucket exchange (explode -> window on (band_id,
         # band_hash)) is the shared substrate of candidate generation
-        # (every verify tier) and the star-edge observability stats.
+        # (every verify tier) and the star-edge bucket stats.
         # Compute it ONCE — r6: for BOTH modalities in a
         # single exchange — persist it (narrow: id + band ints + two
         # window columns), and let every consumer read the cache.
@@ -380,7 +375,6 @@ class DedupPipeline:
         # (band_id, band_hash) group is identical to the split form —
         # the audio band_hash already encodes its own band index, so
         # only the internal positional id shifts).
-        lsh_stats: dict = {}
         n_text_bands = cfg.bands
         all_bands = (
             F.concat(F.col("bands"), F.col("audio_bands"))
@@ -391,16 +385,9 @@ class DedupPipeline:
             lsh.explode_bands(sigs.withColumn("__all_bands", all_bands),
                               "clip_id", "__all_bands")
         ).persist()
-        sized_text = sized_all.filter(F.col("band_id") < n_text_bands)
-        sized_audio = (
-            sized_all.filter(F.col("band_id") >= n_text_bands)
-            if with_audio
-            else None
-        )
         sized_lm = None
-        stats_future = None
-        # everything from candidates through verified runs under one
-        # try/finally: an exception anywhere in between must not leak
+        # everything from candidates through the bucket stats runs under
+        # one try/finally: an exception anywhere in between must not leak
         # the persisted band-bucket frames into executor storage for the
         # rest of the application
         try:
@@ -442,76 +429,38 @@ class DedupPipeline:
                 verify.verify_flagged(candidates, sigs, cfg), "verified_pairs"
             )
 
-            # stats AFTER the verified materialization so every cache is
-            # already populated: ONE unioned collect over cached
-            # partitions covers text + audio + landmark bucket metrics
-            # (previously two driver actions)
-            stats_df = lsh.bucket_stats(sized_text, cfg.max_bucket_size).withColumn(
-                "kind", F.lit("text")
-            )
-            if sized_audio is not None:
-                stats_df = stats_df.unionByName(
-                    lsh.bucket_stats(sized_audio, cfg.max_bucket_size).withColumn(
-                        "kind", F.lit("audio")
-                    )
-                )
+            # star-cap stats AFTER the verified commit, so the band-bucket
+            # caches are already populated: one ungrouped aggregate per
+            # cached frame, split per modality by band_id
+            slices = {"text": F.col("band_id") < n_text_bands}
+            if with_audio:
+                slices["audio"] = F.col("band_id") >= n_text_bands
+            lsh_stats = lsh.bucket_stats_by(sized_all, cfg.max_bucket_size, slices)
             if sized_lm is not None:
-                stats_df = stats_df.unionByName(
-                    lsh.bucket_stats(sized_lm, cfg.max_bucket_size).withColumn(
-                        "kind", F.lit("landmarks")
-                    )
-                )
-            # stats collect OVERLAPS the CC fixpoint (guide §2.6:
-            # overlap independent jobs): the stats read only the
-            # persisted band-bucket caches, while CC reads the two
-            # committed edge tables — no shared lineage. The stats job
-            # is submitted from a helper thread here and joined before
-            # the caches unpersist; the recorded metric is the time the
-            # critical path actually BLOCKED on it (normally ~0: the
-            # fixpoint jobs are longer than the one cached partial agg).
-            from concurrent.futures import ThreadPoolExecutor
-
-            stats_pool = ThreadPoolExecutor(max_workers=1)
-            stats_future = stats_pool.submit(stats_df.collect)
-            stats_pool.shutdown(wait=False)  # thread finishes its one job
-
-            # ---- connected components (overlapped with stats) ----------
-            all_edges = verified.select("id_a", "id_b").unionByName(
-                exact_edges.select("id_a", "id_b")
-            )
-            t_cc = time.monotonic()
-            cc_info: dict = {}
-            comp = connected_components(
-                all_edges, "id_a", "id_b", cfg.cc_max_iterations,
-                local_threshold=cfg.cc_local_edges, info=cc_info,
-            )
-            # the fixpoint's driver jobs (fingerprint collects / union-find
-            # collect) run inside the call above — surface them as their own
-            # metric so the fixed-latency floor is observable per run
-            metrics.append(
-                StageMetric("cc_fixpoint", cc_info.get("n_edges", -1), time.monotonic() - t_cc)
-            )
-
-            t_stats = time.monotonic()
-            for row in stats_future.result():
-                d = row.asDict()
-                kind = d.pop("kind")
-                lsh_stats[kind] = {k: int(v or 0) for k, v in d.items()}
-            metrics.append(
-                StageMetric("lsh_stats_collect", -1, time.monotonic() - t_stats)
-            )
+                lsh_stats.update(lsh.bucket_stats_by(
+                    sized_lm, cfg.max_bucket_size, {"landmarks": None}
+                ))
         finally:
-            # an exception path must still wait for the in-flight stats
-            # job before unpersisting the caches it reads (unpersist
-            # under a running job is safe but silently recomputes the
-            # whole explode+window lineage)
-            if stats_future is not None:
-                from concurrent.futures import wait as _fwait
-
-                _fwait([stats_future])
             sized_all.unpersist()
             if sized_lm is not None:
                 sized_lm.unpersist()
+
+        # ---- connected components -------------------------------------------
+        all_edges = verified.select("id_a", "id_b").unionByName(
+            exact_edges.select("id_a", "id_b")
+        )
+        t_cc = time.monotonic()
+        cc_info: dict = {}
+        comp = connected_components(
+            all_edges, "id_a", "id_b", cfg.cc_max_iterations,
+            local_threshold=cfg.cc_local_edges, info=cc_info,
+        )
+        # the fixpoint's driver jobs (fingerprint collects / union-find
+        # collect) run inside the call above — surface them as their own
+        # metric so the fixed-latency floor is observable per run
+        metrics.append(
+            StageMetric("cc_fixpoint", cc_info.get("n_edges", -1), time.monotonic() - t_cc)
+        )
         lsh_stats["cc"] = cc_info
         # fused mode: the committed signatures table carries every row's
         # (clip_id, transcript_norm) — committed BEFORE exact dedup, so

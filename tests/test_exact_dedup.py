@@ -7,7 +7,10 @@ edge table.
 
 from __future__ import annotations
 
+import contextlib
+
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from sems_event_deduplication_spark.operators.exact_dedup import (
@@ -17,13 +20,13 @@ from sems_event_deduplication_spark.operators.exact_dedup import (
 )
 
 
-def exact_dedup(df, strategy="auto", max_broadcast_ids=20_000_000, algo="xxh128"):
+def exact_dedup(df, max_broadcast_ids=20_000_000, algo="xxh128"):
     """(keepers, edges) of ``df`` (clip_id, transcript_norm, bytes), the
     way the pipeline derives them; the edge table is materialized
     because ``auto`` counts it."""
     keys, digests = exact_dedup_digest_keys("transcript_norm", "bytes", algo)
     edges = digest_rank_edges(df.select("clip_id", *digests), keys).localCheckpoint()
-    return kept_from_edges(df, edges, "clip_id", strategy, max_broadcast_ids), edges
+    return kept_from_edges(df, edges, "clip_id", "auto", max_broadcast_ids), edges
 
 
 def test_keep_last_matches_pandas(spark):
@@ -56,10 +59,27 @@ def test_exact_dedup_edges_connect_drops_to_keeper(spark):
     assert e == {("c3", "c1"), ("c3", "c2")}
 
 
+@contextlib.contextmanager
+def _no_auto_broadcast(spark):
+    """Only an explicit hint broadcasts a join side inside this block."""
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "-1")
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
+
+
 def test_exact_dedup_strategies_agree_and_plan_shapes(spark):
-    """All payload re-attach strategies return identical keepers/edges;
-    the broadcast branches must show a BroadcastHashJoin and the
-    shuffle branch must not broadcast (it's the bucketed-table path)."""
+    """The ``auto`` gate's two outcomes return identical keepers: under
+    the cap the dropped ids are broadcast, and with a zero cap the
+    anti-join runs without a broadcast (the bucketed-table path)."""
     pdf = pd.DataFrame(
         {
             "clip_id": [f"c{i:02d}" for i in range(20)],
@@ -69,20 +89,45 @@ def test_exact_dedup_strategies_agree_and_plan_shapes(spark):
     )
     df = spark.createDataFrame(pdf)
     results = {}
-    for strat in ("anti_broadcast", "semi_broadcast", "shuffle", "auto"):
-        kept, edges = exact_dedup(df, strategy=strat)
-        results[strat] = (
-            {r["clip_id"] for r in kept.collect()},
-            {(r["id_a"], r["id_b"]) for r in edges.collect()},
-        )
-        plan = kept._jdf.queryExecution().executedPlan().toString()
-        if strat in ("anti_broadcast", "semi_broadcast"):
-            assert "BroadcastHashJoin" in plan
-    base = results["anti_broadcast"]
-    assert all(v == base for v in results.values())
-    # auto with a zero threshold must take the shuffle branch
-    kept_big, _ = exact_dedup(df, strategy="auto", max_broadcast_ids=0)
-    assert {r["clip_id"] for r in kept_big.collect()} == base[0]
+    with _no_auto_broadcast(spark):
+        for cap in (20_000_000, 0):
+            kept, edges = exact_dedup(df, max_broadcast_ids=cap)
+            results[cap] = (
+                {r["clip_id"] for r in kept.collect()},
+                {(r["id_a"], r["id_b"]) for r in edges.collect()},
+            )
+            plan = kept._jdf.queryExecution().executedPlan().toString()
+            assert ("BroadcastHashJoin" in plan) == (cap > 0), plan
+    assert results[0] == results[20_000_000]
+    assert len(results[0][0]) == 7
+
+
+def test_kept_from_edges_known_count_runs_no_job(spark, count_jobs):
+    """Given the dropped-row count (the pipeline passes its exact_edges
+    write's), building the keepers launches no count job; the count
+    alone picks the join shape."""
+    pdf = pd.DataFrame(
+        {
+            "clip_id": ["c1", "c2", "c3", "c4"],
+            "transcript_norm": ["same", "same", "same", "diff"],
+            "bytes": [b"x", b"x", b"x", b"y"],
+        }
+    )
+    df = spark.createDataFrame(pdf)
+    keys, digests = exact_dedup_digest_keys("transcript_norm", "bytes")
+    edges = digest_rank_edges(df.select("clip_id", *digests), keys).localCheckpoint()
+    kept = {}
+
+    def build(cap):
+        kept[cap] = kept_from_edges(df, edges, "clip_id", "auto", cap, n_dropped=2)
+
+    with _no_auto_broadcast(spark):
+        for cap in (20_000_000, 0):
+            assert count_jobs(lambda: build(cap)) == 0
+            plan = kept[cap]._jdf.queryExecution().executedPlan().toString()
+            assert ("BroadcastHashJoin" in plan) == (cap > 0), plan
+    with pytest.raises(ValueError, match="'auto'"):
+        kept_from_edges(df, edges, "clip_id", "semi_broadcast")
 
 
 def test_exact_dedup_anti_broadcast_payload_never_shuffles(spark):

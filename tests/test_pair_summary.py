@@ -1,0 +1,58 @@
+"""The paired A/B summary of ``bench_extra.py --pair`` on synthetic
+benchmark results (no Spark)."""
+
+from __future__ import annotations
+
+import bench_extra
+
+E2E = [
+    {"name": "clips_per_s", "better": "higher", "bound": 0.25},
+    {"name": "batch_p50_s", "better": "lower", "bound": 0.25},
+]
+
+
+def _result(clips, p50, correct=True):
+    return {
+        "correct": correct, "attempted": 2, "failed": 0 if correct else 1,
+        "metrics": {
+            "clips_per_s": {"value": clips, "unit": "1/s"},
+            "batch_p50_s": {"value": p50, "unit": "s"},
+        },
+    }
+
+
+def test_summary_medians_wins_and_verdicts():
+    runs = {
+        "base": [_result(c, 2.0) for c in (100, 104, 98, 102, 100)],
+        # every change run reads better on throughput; p50 is 40 % worse
+        "change": [_result(c, 2.8) for c in (110, 112, 109, 111, 115)],
+    }
+    rows = {r["metric"]: r for r in bench_extra.summarize_pairs(runs, E2E)}
+    clips = rows["clips_per_s"]
+    assert clips["base"] == (100, 100, 102) and clips["change"][1] == 111
+    assert clips["wins"] == 5 and clips["pairs"] == 5
+    assert clips["gap_exceeds_base_iqr"] and not clips["worse_than_bound"]
+    assert clips["verdict"] == "within bound"
+    p50 = rows["batch_p50_s"]
+    assert p50["wins"] == 0 and p50["worse_than_bound"]
+    assert p50["verdict"] == "worse"
+    assert clips["bad_runs"] == {"base": 0, "change": 0}
+
+
+def test_summary_wide_spread_is_unresolved_and_counts_bad_runs():
+    runs = {
+        "base": [_result(c, 1.0) for c in (40, 100, 160, 100)],
+        "change": [_result(c, 1.0) for c in (60, 90, 140, 100)]
+        + [_result(100, 1.0, correct=False)],
+    }
+    rows = {r["metric"]: r for r in bench_extra.summarize_pairs(runs, E2E)}
+    clips = rows["clips_per_s"]
+    assert clips["pairs"] == 4  # the unpaired fifth change run is not a pair
+    assert clips["wins"] == 1  # 60 > 40; the tie at 100 counts for neither
+    assert clips["verdict"] == "unresolved"
+    assert clips["bad_runs"] == {"base": 0, "change": 1}
+    # equal runs everywhere: no wins, no gap, within bound
+    assert rows["batch_p50_s"]["wins"] == 0
+    assert rows["batch_p50_s"]["verdict"] == "within bound"
+    lines = bench_extra.format_pair_rows("audio_batch", list(rows.values()))
+    assert lines[0].startswith("audio_batch clips_per_s [higher, bound 0.25]: base ")

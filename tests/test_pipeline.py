@@ -375,6 +375,8 @@ def test_config_validates_enums_at_construction():
         DedupConfig(offset_verify_mode="counts")
     with pytest.raises(ValueError, match="exact_digest_algo"):
         DedupConfig(exact_digest_algo="md5")
+    with pytest.raises(ValueError, match="exact_dedup_strategy"):
+        DedupConfig(exact_dedup_strategy="semi_broadcast")
     DedupConfig(offset_verify_mode="count", exact_digest_algo="sha256")
 
 
@@ -682,6 +684,60 @@ def test_fused_verify_equals_per_tier_union(spark):
     assert not {(w[0], w[1]) for w in want if "text" in w[3]} & prefiltered
 
 
+def _grouped_bucket_stats(banded, cap: int) -> dict:
+    """``lsh.bucket_stats`` as it was defined before it became one
+    ungrouped aggregate: bucket sizes from a per-bucket groupBy."""
+    n = F.col("n")
+    over = n > cap
+    row = banded.groupBy("band_id", "band_hash").agg(
+        F.count(F.lit(1)).alias("n")
+    ).agg(
+        F.count(F.lit(1)).alias("n_buckets"),
+        F.sum(F.when(over, 1).otherwise(0)).alias("n_star_buckets"),
+        F.sum(F.when(over, n).otherwise(0)).alias("n_star_members"),
+        F.sum(F.when(over, (n * (n - 1)) / 2 - (n - 1)).otherwise(0))
+        .cast("long").alias("n_pairs_not_enumerated"),
+    ).collect()[0]
+    return {k: int(v or 0) for k, v in row.asDict().items()}
+
+
+def test_lsh_stats_equal_grouped_definition(spark):
+    """The pipeline's inline bucket stats equal the per-bucket groupBy
+    definition for every modality, over the run's own keeper bands
+    (committed signatures minus the exact-dedup drops): with the offset
+    tier on, a star cap small enough to degrade text buckets, and again
+    on a resumed run that loads every stage."""
+    from dataclasses import replace
+
+    from sems_event_deduplication_spark.operators import lsh
+    from sems_event_deduplication_spark.operators.audio_segments import (
+        landmark_inverted_index,
+    )
+
+    cfg = replace(CFG, with_offset_audio=True, max_bucket_size=8)
+    df = spark.createDataFrame(_tier_corpus(), schema=AUDIO_CLIPS_SCHEMA)
+    wh = WarehouseIO(spark, tempfile.mkdtemp(prefix="wh_stats_"))
+    pipe = DedupPipeline(spark, cfg, wh)
+    first = pipe.run(df, payload_in_survivors=False)
+    keepers = wh.load_clean("signatures").join(
+        wh.load_clean("exact_edges").select(F.col("id_b").alias("clip_id")),
+        "clip_id", "left_anti",
+    )
+    want = {
+        kind: _grouped_bucket_stats(banded, cfg.max_bucket_size)
+        for kind, banded in (
+            ("text", lsh.explode_bands(keepers, "clip_id", "bands")),
+            ("audio", lsh.explode_bands(keepers, "clip_id", "audio_bands")),
+            ("landmarks", landmark_inverted_index(keepers)),
+        )
+    }
+    assert want["text"]["n_star_buckets"] > 0, want
+    resumed = pipe.run(df, resume=True, payload_in_survivors=False)
+    assert _written_rows(resumed) == dict.fromkeys(COMMITTED, -1)
+    for res in (first, resumed):
+        assert {k: v for k, v in res.lsh_stats.items() if k != "cc"} == want
+
+
 def test_fused_verify_folds_offset_tier(offset_run):
     """With the landmark offset tier on, its pairs join the same flags
     aggregation: the committed rows equal the per-tier formula with
@@ -704,18 +760,21 @@ def test_checkpoint_schema_equals_load_clean(offset_run):
 
 def test_min_mode_job_budget(spark, corpus, count_jobs):
     """A run with no mode argument (the one checkpoint layout) stays on
-    its job floor: one verify pass and schema-supplied checkpoint
-    read-backs keep a run of the test corpus at 24 Spark jobs (38 with a
-    verify pass per tier and an inferring read-back per stage). Each
-    committed stage's rows_out, read from an Observation on its write
-    rather than a count job, equals its table's rows."""
+    its job floor: one verify pass, schema-supplied checkpoint
+    read-backs, an exact-dedup gate fed by the exact_edges write's row
+    count and one ungrouped bucket-stats aggregate keep a run of the
+    test corpus at 21 Spark jobs (38 with a verify pass per tier and an
+    inferring read-back per stage, 24 with a gate count job and a
+    grouped stats collect). Each committed stage's rows_out, read from
+    an Observation on its write rather than a count job, equals its
+    table's rows."""
     corpus.count()  # the cached corpus materializes outside the count
     wh = WarehouseIO(spark, tempfile.mkdtemp(prefix="wh_jobs_"))
     runs = []
     n = count_jobs(lambda: runs.append(
         DedupPipeline(spark, CFG, wh).run(corpus, with_audio=True)
     ))
-    assert n <= 24, n
+    assert n <= 21, n
     rows = _written_rows(runs[0])
     assert rows == {name: wh.load_clean(name).count() for name in COMMITTED}
     assert min(rows.values()) > 0, rows

@@ -97,10 +97,11 @@ def test_containment_within_forced_bucket(spark):
 
 def test_bucket_stats_counts_star_degradation(spark):
     """bucket_stats must report exactly the buckets the star-edge cap
-    degrades and how many pairs were not enumerated."""
+    degrades and how many pairs were not enumerated, from a raw banded
+    frame and from its ``size_buckets`` form alike."""
     import pandas as pd
 
-    from sems_event_deduplication_spark.operators.lsh import bucket_stats
+    from sems_event_deduplication_spark.operators.lsh import bucket_stats, size_buckets
 
     rows = (
         # bucket (0, 1): 5 members -> over a cap of 3
@@ -113,14 +114,15 @@ def test_bucket_stats_counts_star_degradation(spark):
     banded = spark.createDataFrame(
         pd.DataFrame(rows, columns=["clip_id", "band_id", "band_hash"])
     )
-    got = bucket_stats(banded, max_bucket_size=3).first().asDict()
-    assert got == {
-        "n_buckets": 3,
-        "n_star_buckets": 1,
-        "n_star_members": 5,
-        # 5*4/2 = 10 full pairs, 4 star edges emitted -> 6 not enumerated
-        "n_pairs_not_enumerated": 6,
-    }
+    for form in (banded, size_buckets(banded)):
+        got = bucket_stats(form, max_bucket_size=3).first().asDict()
+        assert got == {
+            "n_buckets": 3,
+            "n_star_buckets": 1,
+            "n_star_members": 5,
+            # 5*4/2 = 10 full pairs, 4 star edges emitted -> 6 not enumerated
+            "n_pairs_not_enumerated": 6,
+        }
 
 
 def _containment_case(spark, rows, texts):
