@@ -9,7 +9,7 @@ repeated, and explained without touching the frozen harness:
   python bench_extra.py --text [n]             # text e2e repeats
   python bench_extra.py --explain              # write plans/r06/*_{when}.txt
   python bench_extra.py --pair <base-ref> [--workload W] [--seed S] [--pairs N]
-                                               # paired A/B of perfbench runs
+                        [--trace 1]            # paired A/B of perfbench runs
 
 Timing uses the same shapes as bench.py (toPandas for contract queries,
 pipeline wall for audio). Per-layer and per-stage pipeline numbers come
@@ -17,13 +17,16 @@ from ``perfbench/run.py --trace 1``.
 
 ``--pair`` extracts ``<base-ref>`` with ``git archive`` into a temporary
 directory and runs the benchmark declared in ``BENCHMARK.json``
-untraced, alternately in that tree and in this checkout (one Spark
-process at a time, the side that goes first alternating per pair, each
-run with its own cwd and ``PYTHONPATH``). It prints, per workload and
-end-to-end metric, each side's median and quartiles, the change's wins,
-whether the median gap exceeds the base's interquartile range, whether
-the change is worse than the metric's bound, and failed or incorrect
-runs.
+(untraced unless ``--trace 1``), alternately in that tree and in this
+checkout (one Spark process at a time, the side that goes first
+alternating per pair, each run with its own cwd and ``PYTHONPATH``). It
+prints, per workload and end-to-end metric, each side's median and
+quartiles, the change's wins, whether the median gap exceeds the base's
+interquartile range, whether the change is worse than the metric's
+bound, and failed or incorrect runs. With ``--trace 1`` it also prints
+each ``per_layer`` metric the traced results carry: median and
+quartiles per side and wins, with no verdict (per-layer metrics have no
+bound).
 """
 
 from __future__ import annotations
@@ -124,12 +127,12 @@ def run_text(reps: int = 2) -> dict:
     return {"text_dedup_e2e": times}
 
 
-def _perfbench(bench: dict, tree: str, workload: str, seed: int) -> dict:
-    """One untraced benchmark run in ``tree``: its result JSON, or a
-    failed run when it printed none."""
+def _perfbench(bench: dict, tree: str, workload: str, seed: int, trace: int) -> dict:
+    """One benchmark run in ``tree``: its result JSON, or a failed run
+    when it printed none."""
     cmd = bench["command"] + [
         "--workload", workload, "--seed", str(seed),
-        "--seconds", str(bench["run_seconds"]), "--trace", "0",
+        "--seconds", str(bench["run_seconds"]), "--trace", str(trace),
     ]
     proc = subprocess.run(
         cmd, cwd=tree, env={**os.environ, "PYTHONPATH": tree},
@@ -148,23 +151,24 @@ def _quartiles(xs: list[float]) -> tuple[float, float, float]:
     return q1, med, q3
 
 
-def summarize_pairs(runs: dict, end_to_end: list[dict]) -> list[dict]:
-    """One row per end-to-end metric from one workload's paired runs.
+def summarize_pairs(runs: dict, metrics: list[dict]) -> list[dict]:
+    """One row per metric the paired runs of one workload carry.
 
     ``runs`` is ``{"base": [result, ...], "change": [result, ...]}`` in
     pair order, each result a benchmark result JSON. A pair counts as a
     win when the change reads better on it (ties count for neither).
-    ``verdict`` is "worse" when the change's median is worse than the
-    base's by more than the metric's bound, else "unresolved" when
-    either side's interquartile range exceeds the bound (relative to its
-    median) and not every change run beats every base run, else
-    "within bound"."""
+    A metric with a ``bound`` (end to end) also gets a ``verdict``:
+    "worse" when the change's median is worse than the base's by more
+    than the bound, else "unresolved" when either side's interquartile
+    range exceeds the bound (relative to its median) and not every
+    change run beats every base run, else "within bound". A metric
+    without one (per layer) gets medians, quartiles and wins only."""
     bad = {
         side: sum(1 for r in rs if not r.get("correct") or r.get("failed", 0))
         for side, rs in runs.items()
     }
     rows = []
-    for m in end_to_end:
+    for m in metrics:
         name, sign = m["name"], 1 if m["better"] == "higher" else -1
         vals = {
             side: [r["metrics"].get(name, {}).get("value") for r in rs]
@@ -179,6 +183,14 @@ def summarize_pairs(runs: dict, end_to_end: list[dict]) -> list[dict]:
         base = [v for v in vals["base"] if v is not None]
         change = [v for v in vals["change"] if v is not None]
         bq, cq = _quartiles(base), _quartiles(change)
+        row = {
+            "metric": name, "better": m["better"], "base": bq, "change": cq,
+            "wins": sum(1 for b, c in pairs if sign * (c - b) > 0),
+            "pairs": len(pairs), "bad_runs": bad,
+        }
+        rows.append(row)
+        if "bound" not in m:
+            continue
         rel = sign * (cq[1] - bq[1]) / (abs(bq[1]) or 1.0)
         spread = max((q[2] - q[0]) / (abs(q[1]) or 1.0) for q in (bq, cq))
         all_better = min(sign * c for c in change) > max(sign * b for b in base)
@@ -188,16 +200,12 @@ def summarize_pairs(runs: dict, end_to_end: list[dict]) -> list[dict]:
             verdict = "unresolved"
         else:
             verdict = "within bound"
-        rows.append({
-            "metric": name, "better": m["better"], "bound": m["bound"],
-            "base": bq, "change": cq,
-            "wins": sum(1 for b, c in pairs if sign * (c - b) > 0),
-            "pairs": len(pairs),
-            "gap_exceeds_base_iqr": abs(cq[1] - bq[1]) > bq[2] - bq[0],
-            "worse_than_bound": rel < -m["bound"],
-            "verdict": verdict,
-            "bad_runs": bad,
-        })
+        row.update(
+            bound=m["bound"],
+            gap_exceeds_base_iqr=abs(cq[1] - bq[1]) > bq[2] - bq[0],
+            worse_than_bound=rel < -m["bound"],
+            verdict=verdict,
+        )
     return rows
 
 
@@ -205,21 +213,31 @@ def format_pair_rows(workload: str, rows: list[dict]) -> list[str]:
     def q(t):
         return f"{t[1]:.4g} ({t[0]:.4g}-{t[2]:.4g})"
 
-    return [
-        f"{workload} {r['metric']} [{r['better']}, bound {r['bound']}]: "
-        f"base {q(r['base'])} | change {q(r['change'])} | "
-        f"wins {r['wins']}/{r['pairs']} | "
-        f"gap > base IQR: {'yes' if r['gap_exceeds_base_iqr'] else 'no'} | "
-        f"worse than bound: {'yes' if r['worse_than_bound'] else 'no'} | "
-        f"{r['verdict']} | failed or incorrect runs: "
-        f"base {r['bad_runs']['base']}, change {r['bad_runs']['change']}"
-        for r in rows
-    ]
+    def line(r):
+        head = (
+            f"base {q(r['base'])} | change {q(r['change'])} | "
+            f"wins {r['wins']}/{r['pairs']}"
+        )
+        if "verdict" not in r:
+            return f"{workload} {r['metric']} [{r['better']}, per layer]: {head}"
+        return (
+            f"{workload} {r['metric']} [{r['better']}, bound {r['bound']}]: "
+            f"{head} | "
+            f"gap > base IQR: {'yes' if r['gap_exceeds_base_iqr'] else 'no'} | "
+            f"worse than bound: {'yes' if r['worse_than_bound'] else 'no'} | "
+            f"{r['verdict']} | failed or incorrect runs: "
+            f"base {r['bad_runs']['base']}, change {r['bad_runs']['change']}"
+        )
+
+    return [line(r) for r in rows]
 
 
-def run_pair(base_ref: str, workloads: list[str], seed: int, pairs: int) -> dict:
+def run_pair(
+    base_ref: str, workloads: list[str], seed: int, pairs: int, trace: int = 0
+) -> dict:
     with open(os.path.join(REPO, "BENCHMARK.json")) as f:
         bench = json.load(f)
+    metrics = bench["end_to_end"] + (bench["per_layer"] if trace else [])
     base_tree = tempfile.mkdtemp(prefix="ab_base_")
     try:
         archive = subprocess.run(
@@ -235,9 +253,9 @@ def run_pair(base_ref: str, workloads: list[str], seed: int, pairs: int) -> dict
             for i in range(pairs):
                 order = ("base", "change") if i % 2 == 0 else ("change", "base")
                 for side in order:
-                    runs[side].append(_perfbench(bench, trees[side], w, seed))
+                    runs[side].append(_perfbench(bench, trees[side], w, seed, trace))
             out[w] = runs
-            for line in format_pair_rows(w, summarize_pairs(runs, bench["end_to_end"])):
+            for line in format_pair_rows(w, summarize_pairs(runs, metrics)):
                 print(line, flush=True)
         return out
     finally:
@@ -252,9 +270,12 @@ def main():
                         choices=["audio_batch", "daily_ingest"])
         ap.add_argument("--seed", type=int, default=1)
         ap.add_argument("--pairs", type=int, default=5)
+        ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
         args = ap.parse_args()
         workloads = args.workload or ["audio_batch", "daily_ingest"]
-        print(json.dumps(run_pair(args.pair, workloads, args.seed, args.pairs)))
+        print(json.dumps(
+            run_pair(args.pair, workloads, args.seed, args.pairs, args.trace)
+        ))
         return
     if "--contract" in sys.argv:
         i = sys.argv.index("--contract")

@@ -1,9 +1,12 @@
 """spark-submit entry point.
 
     spark-submit --py-files sems_event_deduplication_spark.zip main.py \
-        --input <parquet path | iceberg table> \
-        --warehouse <checkpoint dir | iceberg catalog> \
+        --input <parquet path | catalog table> \
+        --warehouse <checkpoint dir> \
         [--resume] [--no-audio] [--config k=v ...]
+
+The checkpoint dir is any Hadoop path: local, ``file://``, ``hdfs://``,
+``s3a://``; a path with no scheme follows ``fs.defaultFS``.
 
 Local smoke (this sandbox):
 
@@ -23,10 +26,12 @@ import time
 
 def parse_args(argv):
     p = argparse.ArgumentParser(description="PySpark near-dup dedup pipeline")
-    p.add_argument("--input", help="parquet path or Iceberg table of audio_clips")
+    p.add_argument("--input", help="parquet path or catalog table of audio_clips")
     p.add_argument("--synth", type=int, default=0,
                    help="generate a synthetic corpus of N base rows instead of --input")
-    p.add_argument("--warehouse", required=True, help="checkpoint dir / catalog")
+    p.add_argument("--warehouse", required=True,
+                   help="checkpoint dir, any Hadoop path: local, file://, hdfs://, "
+                        "s3a://; no scheme = fs.defaultFS")
     p.add_argument("--resume", action="store_true", help="skip committed stages")
     p.add_argument("--no-audio", action="store_true")
     p.add_argument("--cores", type=int, default=None)

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from ..conf import DedupConfig
 from ..functions import minhash as M
 from ..functions import text as X
+from ..sources.warehouse import literal_path
 from . import lsh
 from .exact_dedup import exact_dedup_digest_keys
 from .strategies import register_persisted
@@ -293,27 +294,10 @@ def append_to_index(
         so the ingest driver can safely replay its whole schedule.
 
     At real scale the increments accumulate; fold them into the base
-    periodically by re-running the batch pipeline over the corpus (or,
-    on the Iceberg backend, a table MERGE/rewrite — the parquet
-    fallback deliberately does not implement an in-place base rewrite,
-    which cannot be made crash-atomic on a plain filesystem).
+    periodically by re-running the batch pipeline over the corpus (an
+    in-place base rewrite is deliberately not implemented: it cannot be
+    made crash-atomic on a plain filesystem).
     """
-    import os as _os
-
-    if getattr(wh, "use_iceberg", False):
-        # the increment layout below is a parquet-directory protocol
-        # (batch dirs + commit markers); on Iceberg the equivalent is a
-        # native transactional append/MERGE into the signatures table,
-        # which this sandbox cannot integration-test (no runtime jar —
-        # DEPLOYMENT.md records the attempted run). Fail loudly rather
-        # than writing catalog identifiers containing '/' and '=' that
-        # load_index would never read back.
-        raise NotImplementedError(
-            "append_to_index implements the parquet-fallback increment "
-            "layout; on an Iceberg catalog append the batch with a "
-            "transactional writeTo(...).append() / MERGE into the "
-            "signatures table instead"
-        )
     base = wh.load_clean(name)
     have = {f.name: f.dataType.simpleString() for f in novel_signed.schema}
     bad = [
@@ -329,7 +313,7 @@ def append_to_index(
         )
     sub = f"{name}__inc/batch={batch_id}"
     if n_chunks and n_chunks > 1:
-        marker = _os.path.join(wh._path(sub), "_SUCCESS")
+        marker = f"{wh._path(sub)}/_SUCCESS"
         if wh._fs_read_text(marker) is None:
             wh.checkpoint_chunked(
                 novel_signed, sub, "clip_id", n_chunks, resume=True
@@ -356,8 +340,9 @@ def load_index(wh, name: str = "signatures") -> DataFrame:
     drops columns the base lacks (``_lineage_*``); the recursive lookup
     reads plain ``batch=X/`` and chunked ``batch=X/chunk=i/`` increments
     alike (no partition discovery, hidden ``_temporary`` dirs skipped).
-    The plan and its job count therefore stay flat as increments
-    accumulate. An increment missing a base column would read back as
+    The committed dirs come from ONE ``globStatus`` of
+    ``batch=*/_SUCCESS`` on the warehouse's filesystem, so the plan,
+    its job count and the listing stay flat as increments accumulate. An increment missing a base column would read back as
     nulls, which ``append_to_index`` refuses at write time."""
     return _union_committed(wh, name, wh.load_clean(name))
 
@@ -365,30 +350,15 @@ def load_index(wh, name: str = "signatures") -> DataFrame:
 def _union_committed(wh, name: str, base: DataFrame) -> DataFrame:
     """``load_index`` over an already-read base frame (``append_to_index``
     reuses the one it checked: one schema-inference job fewer)."""
-    import os as _os
-
-    inc_root = wh._path(f"{name}__inc")
-    if not wh._fs_exists(inc_root):
-        return base
-    if wh.remote:
-        fs, p = wh._hadoop_fs(inc_root)
-        batch_dirs = [
-            str(st.getPath()) for st in fs.listStatus(p) if st.isDirectory()
-        ]
-    else:
-        batch_dirs = [
-            _os.path.join(inc_root, d)
-            for d in sorted(_os.listdir(inc_root))
-            if d.startswith("batch=")
-        ]
-    committed = [
-        d for d in batch_dirs if wh._fs_exists(_os.path.join(d, "_SUCCESS"))
-    ]
+    committed = sorted(
+        marker.rsplit("/", 1)[0]
+        for marker in wh._fs_glob(wh._path(f"{name}__inc"), "batch=*/_SUCCESS")
+    )
     if not committed:
         return base
     inc = (
         wh.spark.read.schema(base.schema)
         .option("recursiveFileLookup", "true")
-        .parquet(*committed)
+        .parquet(*map(literal_path, committed))
     )
     return base.unionByName(inc)

@@ -7,31 +7,30 @@ Spark's atomic ``_SUCCESS`` commit marker; ``exists`` only trusts a
 committed write, so a killed run re-executes the interrupted stage
 (idempotent re-entry).
 
-Iceberg: the production target is an Iceberg catalog
-(``df.writeTo("cp.stage").createOrReplace()``). The sandbox image has
-no Iceberg runtime jar, so the same interface falls back to Parquet —
-detection is by Spark conf, not import, because Iceberg is a JVM
-extension. Either backend is hidden behind this class (SURVEY.md §7
-step 5 "WarehouseIO abstraction").
+The warehouse dir is any Hadoop path: local, ``file://``, ``hdfs://``,
+``s3a://``; a path with no scheme follows ``fs.defaultFS``. Every
+marker read and write, existence check, listing and cleanup resolves
+the path's Hadoop ``FileSystem`` from the session's Hadoop conf — the
+same resolution Spark's writer uses — so resume sees exactly what the
+writes committed, on whichever filesystem that is.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
+import re
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+_GLOB_CHARS = re.compile(r"([\\{}\[\]*?])")
 
-def _needs_hadoop_fs(path: str) -> bool:
-    """Any URI-schemed warehouse path (hdfs://, s3a://, even file://)
-    must route marker/_SUCCESS/cleanup ops through the Hadoop
-    FileSystem API — ``os.path`` on ``s3a://...`` silently reports
-    nothing exists, which would degrade every resume to a full rebuild
-    and skip stale-chunk invalidation. Plain local paths keep cheap
-    os/shutil calls."""
-    return "://" in path
+
+def literal_path(path: str) -> str:
+    """``path`` with Hadoop glob metacharacters escaped. Spark's file
+    reader globs every path it is given, so a warehouse dir containing
+    ``[`` or ``{`` would otherwise be read as a pattern."""
+    return _GLOB_CHARS.sub(r"\\\1", path)
 
 
 def _row_count():
@@ -39,66 +38,36 @@ def _row_count():
     return F.count(F.lit(1)).alias("rows")
 
 
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        exts = spark.conf.get("spark.sql.extensions") or ""
-    except Exception:
-        return False
-    return "IcebergSparkSessionExtensions" in exts
-
-
 class WarehouseIO:
-    def __init__(self, spark: SparkSession, base_dir: str, catalog: str | None = None):
+    def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base_dir = base_dir
-        self.use_iceberg = catalog is not None and _iceberg_available(spark)
-        self.catalog = catalog
-        self.remote = _needs_hadoop_fs(base_dir)
         # stage name -> the Observations on its last checkpoint's writes,
         # or None when that checkpoint loaded committed rows (rows_written)
         self._observed: dict[str, list[Observation] | None] = {}
-        if self.remote:
-            self._fs_mkdirs(base_dir)
-        else:
-            os.makedirs(base_dir, exist_ok=True)
+        self._fs_mkdirs(base_dir)
 
-    # ---- filesystem plumbing: marker/_SUCCESS/cleanup ops must work on
-    # the warehouse's OWN filesystem (hdfs://, s3a://, ...) — the 100 TB
-    # shape — not just the driver's local disk. Remote paths route
-    # through the Hadoop FileSystem API via the JVM gateway; local paths
-    # keep cheap os/shutil calls.
+    # ---- filesystem plumbing: every op resolves the path's Hadoop
+    # FileSystem, as Spark's writer does, so a marker or listing never
+    # looks at a different filesystem than the write it checks.
 
     def _hadoop_fs(self, path: str):
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
+        p = self.spark._jvm.org.apache.hadoop.fs.Path(path)
         return p.getFileSystem(self.spark._jsc.hadoopConfiguration()), p
 
     def _fs_exists(self, path: str) -> bool:
-        if not self.remote:
-            return os.path.exists(path)
         fs, p = self._hadoop_fs(path)
         return fs.exists(p)
 
     def _fs_rmtree(self, path: str) -> None:
-        if not self.remote:
-            shutil.rmtree(path, ignore_errors=True)
-            return
         fs, p = self._hadoop_fs(path)
-        if fs.exists(p):
-            fs.delete(p, True)
+        fs.delete(p, True)
 
     def _fs_mkdirs(self, path: str) -> None:
-        if not self.remote:
-            os.makedirs(path, exist_ok=True)
-            return
         fs, p = self._hadoop_fs(path)
         fs.mkdirs(p)
 
     def _fs_write_text(self, path: str, text: str) -> None:
-        if not self.remote:
-            with open(path, "w") as fh:
-                fh.write(text)
-            return
         fs, p = self._hadoop_fs(path)
         out = fs.create(p, True)
         try:
@@ -113,12 +82,6 @@ class WarehouseIO:
         marker as "layout invalid" and deletes every committed chunk,
         so swallowing a transient remote error would silently discard
         hours of committed progress instead of failing the run."""
-        if not self.remote:
-            try:
-                with open(path) as fh:
-                    return fh.read()
-            except FileNotFoundError:
-                return None
         fs, p = self._hadoop_fs(path)
         try:
             # open directly and classify the failure — an exists()
@@ -139,16 +102,22 @@ class WarehouseIO:
         finally:
             stream.close()
 
+    def _fs_glob(self, path: str, pattern: str) -> list[str]:
+        """The paths matching ``pattern`` under the literal dir
+        ``path`` (its glob metacharacters escaped), from ONE
+        ``globStatus`` call; [] when ``path`` does not exist."""
+        fs, p = self._hadoop_fs(f"{literal_path(path)}/{pattern}")
+        return [str(st.getPath()) for st in fs.globStatus(p) or []]
+
     def _path(self, name: str) -> str:
         return os.path.join(self.base_dir, name)
 
     def exists(self, name: str) -> bool:
-        if self.use_iceberg:
-            return self.spark.catalog.tableExists(f"{self.catalog}.{name}")
         return self._fs_exists(os.path.join(self._path(name), "_SUCCESS"))
 
     def save(self, df: DataFrame, name: str, stage: str | None = None) -> None:
-        """Write a stage table; adds per-partition lineage columns.
+        """Write a stage table as a Parquet directory under the
+        warehouse dir; adds per-partition lineage columns.
 
         Lineage: originating spark partition + stage label travel with
         every row (north-rule "per-partition lineage").
@@ -156,15 +125,10 @@ class WarehouseIO:
         out = df.withColumn("_lineage_stage", F.lit(stage or name)).withColumn(
             "_lineage_part", F.spark_partition_id()
         )
-        if self.use_iceberg:
-            out.writeTo(f"{self.catalog}.{name}").createOrReplace()
-        else:
-            out.write.mode("overwrite").parquet(self._path(name))
+        out.write.mode("overwrite").parquet(self._path(name))
 
     def load(self, name: str) -> DataFrame:
-        if self.use_iceberg:
-            return self.spark.read.table(f"{self.catalog}.{name}")
-        return self.spark.read.parquet(self._path(name))
+        return self.spark.read.parquet(literal_path(self._path(name)))
 
     def load_clean(self, name: str) -> DataFrame:
         """Load without the lineage columns (for stage chaining)."""
@@ -173,10 +137,7 @@ class WarehouseIO:
         return df.drop(*drop)
 
     def drop(self, name: str) -> None:
-        if self.use_iceberg:
-            self.spark.sql(f"DROP TABLE IF EXISTS {self.catalog}.{name}")
-        else:
-            self._fs_rmtree(self._path(name))
+        self._fs_rmtree(self._path(name))
 
     def save_bucketed(
         self,
@@ -298,7 +259,9 @@ class WarehouseIO:
         self._observed[name] = None if loaded else written
         # read back ONLY the expected chunk dirs (never `base` wholesale:
         # a resumed run must not pick up stale extra chunk=* dirs)
-        out = self.spark.read.option("basePath", base).parquet(*chunk_dirs)
+        out = self.spark.read.option("basePath", base).parquet(
+            *map(literal_path, chunk_dirs)
+        )
         return out.drop("chunk", "_lineage_stage", "_lineage_part")
 
     def rows_written(self, name: str) -> int:
@@ -322,14 +285,15 @@ class WarehouseIO:
         (``df.schema``, which leaves out the lineage columns) instead
         of inferring it, so it launches no footer-reading job; file
         sources make every field nullable either way, so the result's
-        schema equals ``load_clean(name).schema``. The resume and
-        Iceberg paths read through ``load_clean``."""
+        schema equals ``load_clean(name).schema``. The resume path
+        reads through ``load_clean``; ``exists`` checks the commit
+        marker on the filesystem the write went to."""
         if resume and self.exists(name):
             self._observed[name] = None
             return self.load_clean(name)
         obs = Observation()
         self.save(df.observe(obs, _row_count()), name)
         self._observed[name] = [obs]
-        if self.use_iceberg:
-            return self.load_clean(name)
-        return self.spark.read.schema(df.schema).parquet(self._path(name))
+        return self.spark.read.schema(df.schema).parquet(
+            literal_path(self._path(name))
+        )

@@ -30,6 +30,37 @@ def corpus(spark, corpus_pdf):
     return spark.createDataFrame(corpus_pdf, schema=AUDIO_CLIPS_SCHEMA).cache()
 
 
+@pytest.fixture
+def viewfs_warehouse(spark, tmp_path):
+    """(base_dir, real_dir): a scheme-less warehouse dir under a viewfs
+    default filesystem that maps it onto ``real_dir``, a different local
+    directory, as a cluster's ``fs.defaultFS`` maps driver-style paths
+    onto HDFS or S3. Set on the session's Hadoop conf and restored
+    afterwards; each use gets its own mount table, because the Hadoop
+    FileSystem cache keeps a viewfs instance per authority."""
+    import uuid
+
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    authority = f"wh{uuid.uuid4().hex[:12]}"
+    virtual, real = tmp_path / "virtual", tmp_path / "real"
+    real.mkdir()
+    table = f"fs.viewfs.mounttable.{authority}"
+    mounts = {
+        f"{table}.link.{virtual}": f"file://{real}",
+        f"{table}.linkFallback": "file:///",
+    }
+    default_fs = conf.get("fs.defaultFS")
+    for k, v in mounts.items():
+        conf.set(k, v)
+    conf.set("fs.defaultFS", f"viewfs://{authority}/")
+    try:
+        yield str(virtual / "wh"), str(real / "wh")
+    finally:
+        conf.set("fs.defaultFS", default_fs)
+        for k in mounts:
+            conf.unset(k)
+
+
 @pytest.fixture(scope="session")
 def count_jobs(spark):
     """count_jobs(fn) -> Spark jobs ``fn()`` launched: those tagged with

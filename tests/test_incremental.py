@@ -315,30 +315,6 @@ def test_incremental_persist_shape_regression(spark, cfg):
         release_gated_broadcasts()
 
 
-def test_append_to_index_refuses_iceberg_backend(spark, cfg):
-    """The increment layout is a parquet-directory protocol; on an
-    Iceberg-dispatching warehouse it must fail loudly (the catalog
-    identifier would contain '/' and '=', and load_index would never
-    see a catalog-side increment) — review finding r5."""
-    import tempfile
-
-    from sems_event_deduplication_spark.operators.incremental import (
-        append_to_index,
-    )
-    from sems_event_deduplication_spark.sources.warehouse import WarehouseIO
-
-    wh = WarehouseIO(spark, tempfile.mkdtemp(prefix="wh_ice_"))
-    wh.use_iceberg = True  # mock dispatch, like test_warehouse.py
-    novel = sign_batch(
-        spark.createDataFrame(
-            pd.DataFrame({"clip_id": ["n0"], "transcript": [BASE[0]]})
-        ),
-        cfg,
-    )
-    with pytest.raises(NotImplementedError, match="Iceberg|writeTo"):
-        append_to_index(novel, wh, batch_id="b1")
-
-
 def _novel(spark, cfg, prefix: str, n: int):
     return sign_batch(
         spark.createDataFrame(
@@ -354,12 +330,12 @@ def _novel(spark, cfg, prefix: str, n: int):
     )
 
 
-def _index_wh(spark, cfg, tag: str, extra_col: bool = False):
+def _index_wh(spark, cfg, tag: str, extra_col: bool = False, base_dir=None):
     import tempfile
 
     from sems_event_deduplication_spark.sources.warehouse import WarehouseIO
 
-    wh = WarehouseIO(spark, tempfile.mkdtemp(prefix=f"wh_{tag}_"))
+    wh = WarehouseIO(spark, base_dir or tempfile.mkdtemp(prefix=f"wh_{tag}_"))
     base = _novel(spark, cfg, "base", len(BASE))
     if extra_col:
         base = base.withColumn("extra", F.lit(7))
@@ -476,3 +452,33 @@ def test_append_to_index_refuses_schema_mismatch(spark, cfg):
     assert sorted(r["extra"] for r in load_index(wh).collect()) == (
         [7] * len(BASE) + [8] * 3
     )
+
+
+def test_index_grows_under_scheme_less_base_on_default_fs(
+    spark, cfg, viewfs_warehouse
+):
+    """With a scheme-less base dir under a viewfs default filesystem the
+    increment listing looks where the increments were written, so the
+    index grows by every committed batch."""
+    from sems_event_deduplication_spark.operators.incremental import (
+        append_to_index, load_index,
+    )
+
+    base, _ = viewfs_warehouse
+    wh = _index_wh(spark, cfg, "viewfs", base_dir=base)
+    append_to_index(_novel(spark, cfg, "v_", 5), wh, "v")
+    assert load_index(wh).count() == len(BASE) + 5
+
+
+def test_load_index_base_dir_with_glob_characters(spark, cfg, tmp_path):
+    """A base dir containing glob metacharacters is a literal path, both
+    for the committed-increment listing and for the reads: every plain
+    and chunked increment is in the index."""
+    from sems_event_deduplication_spark.operators.incremental import (
+        append_to_index, load_index,
+    )
+
+    wh = _index_wh(spark, cfg, "glob", base_dir=str(tmp_path / "wh[1]{a"))
+    append_to_index(_novel(spark, cfg, "g1_", 3), wh, "g1")
+    append_to_index(_novel(spark, cfg, "g2_", 4), wh, "g2", n_chunks=2)
+    assert load_index(wh).count() == len(BASE) + 3 + 4

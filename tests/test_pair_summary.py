@@ -56,3 +56,40 @@ def test_summary_wide_spread_is_unresolved_and_counts_bad_runs():
     assert rows["batch_p50_s"]["verdict"] == "within bound"
     lines = bench_extra.format_pair_rows("audio_batch", list(rows.values()))
     assert lines[0].startswith("audio_batch clips_per_s [higher, bound 0.25]: base ")
+
+
+def test_per_layer_metrics_get_medians_and_wins_but_no_verdict():
+    """Metrics without a bound (the per-layer ones of a traced run) get
+    medians, quartiles and wins only, and format without a verdict."""
+    def traced(jobs, sign_s):
+        return {
+            "correct": True, "attempted": 1, "failed": 0,
+            "metrics": {
+                "pipeline.spark_jobs": {"value": jobs, "unit": "count"},
+                "audio.sign_s": {"value": sign_s, "unit": "s"},
+            },
+        }
+
+    per_layer = [
+        {"name": "pipeline.spark_jobs", "unit": "count", "better": "lower"},
+        {"name": "audio.sign_s", "unit": "s", "better": "lower"},
+    ]
+    runs = {
+        "base": [traced(22, s) for s in (1.0, 1.2, 1.1)],
+        "change": [traced(22, s) for s in (0.9, 1.3, 1.0)],
+    }
+    rows = {
+        r["metric"]: r
+        for r in bench_extra.summarize_pairs(runs, E2E + per_layer)
+    }
+    assert set(rows) == {"pipeline.spark_jobs", "audio.sign_s"}
+    jobs, sign = rows["pipeline.spark_jobs"], rows["audio.sign_s"]
+    assert jobs["base"] == jobs["change"] == (22, 22, 22)
+    assert jobs["wins"] == 0 and jobs["pairs"] == 3  # ties win nothing
+    assert sign["change"][1] == 1.0 and sign["wins"] == 2
+    assert "verdict" not in sign and "bound" not in sign
+    line = bench_extra.format_pair_rows("audio_batch", [sign])[0]
+    assert line == (
+        "audio_batch audio.sign_s [lower, per layer]: "
+        "base 1.1 (1.05-1.15) | change 1 (0.95-1.15) | wins 2/3"
+    )

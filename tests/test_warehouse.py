@@ -100,42 +100,6 @@ def test_checkpoint_chunked_stale_chunks_cleared(spark, tmp_path):
     )
 
 
-def test_iceberg_dispatch_mocked(tmp_path):
-    """The Iceberg branch has no runtime jar in this sandbox, so the
-    dispatch itself is exercised against a mocked session: detection by
-    conf, writeTo/createOrReplace on save, catalog.tableExists on
-    exists, read.table on load, DROP TABLE on drop."""
-    from unittest.mock import MagicMock
-
-    spark = MagicMock()
-    spark.conf.get.return_value = (
-        "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions"
-    )
-    wh = WarehouseIO(spark, str(tmp_path), catalog="cp")
-    assert wh.use_iceberg
-
-    df = MagicMock()
-    wh.save(df, "sigs")
-    stamped = df.withColumn.return_value.withColumn.return_value
-    stamped.writeTo.assert_called_once_with("cp.sigs")
-    stamped.writeTo.return_value.createOrReplace.assert_called_once()
-
-    spark.catalog.tableExists.return_value = True
-    assert wh.exists("sigs") is True
-    spark.catalog.tableExists.assert_called_with("cp.sigs")
-
-    wh.load("sigs")
-    spark.read.table.assert_called_with("cp.sigs")
-
-    wh.drop("sigs")
-    spark.sql.assert_called_with("DROP TABLE IF EXISTS cp.sigs")
-
-    # no Iceberg extension -> parquet fallback even with a catalog
-    plain = MagicMock()
-    plain.conf.get.return_value = ""
-    assert not WarehouseIO(plain, str(tmp_path), catalog="cp").use_iceberg
-
-
 def test_chunk_key_desc_stable_for_columns():
     """The resume marker for a Column chunk key derives from the
     expression's canonical SQL, not Column.__str__ (whose expr ids
@@ -190,12 +154,11 @@ def test_checkpoint_chunked_date_aligned_prunes_scan(spark, tmp_path):
 
 
 def test_warehouse_hadoop_fs_branch_via_file_uri(spark, tmp_path):
-    """A URI-schemed base dir (here file://, same code path as
-    hdfs://s3a://) must route exists/marker/cleanup through the Hadoop
-    FileSystem API and still support chunked resume end-to-end."""
+    """A URI-schemed base dir (here file://, the same Hadoop FileSystem
+    path as hdfs:// or s3a://) supports markers, cleanup and chunked
+    resume end-to-end."""
     base = f"file://{tmp_path}/wh_uri"
     wh = WarehouseIO(spark, base)
-    assert wh.remote
     df = _df(spark, 60)
     out = wh.checkpoint_chunked(df, "s", "clip_id", n_chunks=3)
     assert out.count() == 60
@@ -259,3 +222,45 @@ def test_rows_written_from_observations(spark, tmp_path, count_jobs):
     os.remove(os.path.join(str(tmp_path), "c", "chunk=1", "_SUCCESS"))
     wh.checkpoint_chunked(signed, "c", "clip_id", n_chunks=4, resume=True)
     assert wh.rows_written("c") == -1  # three chunks were loaded
+
+
+def test_scheme_less_base_resumes_on_default_fs(spark, viewfs_warehouse):
+    """A base dir with no scheme is written to ``fs.defaultFS``, and the
+    commit-marker check that resume relies on looks there too: after a
+    save the stage exists, and a resumed checkpoint loads it instead of
+    writing it again."""
+    base, real = viewfs_warehouse
+    wh = WarehouseIO(spark, base)
+    df = _df(spark, 10)
+    wh.save(df, "signatures")
+    assert os.path.exists(os.path.join(real, "signatures", "_SUCCESS"))
+    assert wh.exists("signatures")
+
+    wh.checkpoint(df, "t")
+    assert wh.rows_written("t") == 10
+    out = wh.checkpoint(df, "t", resume=True)
+    assert wh.rows_written("t") == -1
+    assert sorted(out.collect()) == sorted(df.collect())
+
+
+def test_scheme_less_base_chunked_resume_on_default_fs(spark, viewfs_warehouse):
+    """Chunked checkpoints under a viewfs default filesystem: the
+    ``_chunking`` marker and each chunk's ``_SUCCESS`` are read where
+    the chunks were written, so a resume rewrites only the missing
+    chunk."""
+    base, real = viewfs_warehouse
+    wh = WarehouseIO(spark, base)
+    df = _df(spark, 60)
+    wh.checkpoint_chunked(df, "c", "clip_id", n_chunks=4)
+    assert wh.rows_written("c") == 60
+
+    def marker(i):
+        return os.path.join(real, "c", f"chunk={i}", "_SUCCESS")
+
+    os.remove(marker(1))
+    kept = {i: os.path.getmtime(marker(i)) for i in (0, 2, 3)}
+    out = wh.checkpoint_chunked(df, "c", "clip_id", n_chunks=4, resume=True)
+    assert wh.rows_written("c") == -1  # three chunks were loaded
+    assert os.path.exists(marker(1))
+    assert {i: os.path.getmtime(marker(i)) for i in kept} == kept
+    assert sorted(out.collect()) == sorted(df.collect())
