@@ -342,8 +342,9 @@ def load_index(wh, name: str = "signatures") -> DataFrame:
     alike (no partition discovery, hidden ``_temporary`` dirs skipped).
     The committed dirs come from ONE ``globStatus`` of
     ``batch=*/_SUCCESS`` on the warehouse's filesystem, so the plan,
-    its job count and the listing stay flat as increments accumulate. An increment missing a base column would read back as
-    nulls, which ``append_to_index`` refuses at write time."""
+    its job count and the listing stay flat as increments accumulate.
+    An increment missing a base column would read back as nulls, which
+    ``append_to_index`` refuses at write time."""
     return _union_committed(wh, name, wh.load_clean(name))
 
 
