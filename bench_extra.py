@@ -23,7 +23,9 @@ alternating per pair, each run with its own cwd and ``PYTHONPATH``). It
 prints, per workload and end-to-end metric, each side's median and
 quartiles, the change's wins, whether the median gap exceeds the base's
 interquartile range, whether the change is worse than the metric's
-bound, and failed or incorrect runs. With ``--trace 1`` it also prints
+bound, whether a gain is shown (at least 9/10 pairs won, a better
+median, and a median gap above the base's interquartile range), and
+failed or incorrect runs. With ``--trace 1`` it also prints
 each ``per_layer`` metric the traced results carry: median and
 quartiles per side and wins, with no verdict (per-layer metrics have no
 bound).
@@ -161,8 +163,11 @@ def summarize_pairs(runs: dict, metrics: list[dict]) -> list[dict]:
     "worse" when the change's median is worse than the base's by more
     than the bound, else "unresolved" when either side's interquartile
     range exceeds the bound (relative to its median) and not every
-    change run beats every base run, else "within bound". A metric
-    without one (per layer) gets medians, quartiles and wins only."""
+    change run beats every base run, else "within bound". It also gets
+    ``gain_shown``, the claim rule of the benchmark method: the change
+    wins at least 9 of every 10 pairs, its median is better, and the
+    median gap exceeds the base's interquartile range. A metric
+    without a bound (per layer) gets medians, quartiles and wins only."""
     bad = {
         side: sum(1 for r in rs if not r.get("correct") or r.get("failed", 0))
         for side, rs in runs.items()
@@ -192,6 +197,7 @@ def summarize_pairs(runs: dict, metrics: list[dict]) -> list[dict]:
         if "bound" not in m:
             continue
         rel = sign * (cq[1] - bq[1]) / (abs(bq[1]) or 1.0)
+        gap_exceeds_iqr = abs(cq[1] - bq[1]) > bq[2] - bq[0]
         spread = max((q[2] - q[0]) / (abs(q[1]) or 1.0) for q in (bq, cq))
         all_better = min(sign * c for c in change) > max(sign * b for b in base)
         if rel < -m["bound"]:
@@ -202,9 +208,13 @@ def summarize_pairs(runs: dict, metrics: list[dict]) -> list[dict]:
             verdict = "within bound"
         row.update(
             bound=m["bound"],
-            gap_exceeds_base_iqr=abs(cq[1] - bq[1]) > bq[2] - bq[0],
+            gap_exceeds_base_iqr=gap_exceeds_iqr,
             worse_than_bound=rel < -m["bound"],
             verdict=verdict,
+            gain_shown=(
+                10 * row["wins"] >= 9 * row["pairs"] and rel > 0
+                and gap_exceeds_iqr
+            ),
         )
     return rows
 
@@ -225,7 +235,9 @@ def format_pair_rows(workload: str, rows: list[dict]) -> list[str]:
             f"{head} | "
             f"gap > base IQR: {'yes' if r['gap_exceeds_base_iqr'] else 'no'} | "
             f"worse than bound: {'yes' if r['worse_than_bound'] else 'no'} | "
-            f"{r['verdict']} | failed or incorrect runs: "
+            f"{r['verdict']} | "
+            f"gain shown: {'yes' if r['gain_shown'] else 'no'} | "
+            f"failed or incorrect runs: "
             f"base {r['bad_runs']['base']}, change {r['bad_runs']['change']}"
         )
 

@@ -97,6 +97,16 @@ def _estimated_scan_partitions(df: DataFrame, max_partition_bytes: int = 64 << 2
     return max(1, n)
 
 
+def _compiled_classes(spark: SparkSession) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far:
+    the sample count of ``CodegenMetrics``' compilation-time histogram,
+    one per generated-code cache miss. Read over py4j, no Spark job.
+    The counter is JVM-wide, so the delta around a call also counts
+    any query running concurrently in the same JVM."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 @dataclass
 class StageMetric:
     """One timed step of a run. ``rows_out`` of a committed stage is the
@@ -127,6 +137,11 @@ class PipelineResult:
     # speed) from sha256 (adversarial-content safety) runs after the
     # fact (conf.py exact_digest_algo caveat)
     exact_digest_algo: str = ""
+    # classes Spark's code generator compiled during run() (the
+    # CodegenMetrics delta, read with no Spark job). 0 on a warm rerun
+    # when the codegen cache holds the run's working set; the counter is
+    # JVM-wide, so a query running concurrently in the same JVM counts too
+    codegen_classes_compiled: int = 0
 
     def metrics_dict(self) -> dict:
         out = {
@@ -141,6 +156,7 @@ class PipelineResult:
             out["lsh_buckets"] = self.lsh_stats
         if self.exact_digest_algo:
             out["exact_digest_algo"] = self.exact_digest_algo
+        out["codegen"] = {"classes_compiled": self.codegen_classes_compiled}
         return out
 
 
@@ -206,6 +222,7 @@ class DedupPipeline:
             )
         cfg = self.cfg
         t_run = time.monotonic()
+        compiled_before = _compiled_classes(self.spark)
         metrics: list[StageMetric] = []
 
         def stage(df: DataFrame, name: str, chunks: int = 0) -> DataFrame:
@@ -509,6 +526,7 @@ class DedupPipeline:
             metrics=metrics, lsh_stats=lsh_stats,
             wall_sec=time.monotonic() - t_run,
             exact_digest_algo=cfg.exact_digest_algo,
+            codegen_classes_compiled=_compiled_classes(self.spark) - compiled_before,
         )
 
     def throughput(self, result: PipelineResult, n_clips: int) -> dict:

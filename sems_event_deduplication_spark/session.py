@@ -63,6 +63,12 @@ def get_spark(
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # generated-code class cache (a static conf: builder only). One
+        # DedupPipeline.run compiles ~132 classes and Spark keeps 100, so
+        # at the default every pass evicted its own classes and Janino
+        # recompiled 118-134 of them on the next pass; 1000 holds a whole
+        # perfbench audio_batch run (173) with room to spare
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # streaming state (r5): RocksDB provider with changelog
         # checkpointing, and the single-store column-family layout for
         # stream-stream join state (stateFormatVersion 3 — valid ONLY

@@ -62,6 +62,16 @@ def viewfs_warehouse(spark, tmp_path):
 
 
 @pytest.fixture(scope="session")
+def codegen_compiled(spark):
+    """codegen_compiled() -> classes Spark's code generator has compiled
+    in this JVM so far, read from CodegenMetrics (one compilation-time
+    sample per generated-code cache miss), independently of the
+    engine's own report."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return lambda: metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+@pytest.fixture(scope="session")
 def count_jobs(spark):
     """count_jobs(fn) -> Spark jobs ``fn()`` launched: those tagged with
     a fresh job group in this thread plus untagged ones (jobs submitted

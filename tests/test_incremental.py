@@ -482,3 +482,45 @@ def test_load_index_base_dir_with_glob_characters(spark, cfg, tmp_path):
     append_to_index(_novel(spark, cfg, "g1_", 3), wh, "g1")
     append_to_index(_novel(spark, cfg, "g2_", 4), wh, "g2", n_chunks=2)
     assert load_index(wh).count() == len(BASE) + 3 + 4
+
+
+def test_ingest_loop_codegen_cache_holds_a_batch(spark, cfg, codegen_compiled):
+    """An ingest loop repeats the same plans batch after batch, so once
+    the codegen cache holds them a batch compiles (almost) no classes:
+    after two warm batches of load_index -> incremental_dedup -> save
+    the hits -> append_to_index, a third compiles at most 10. With
+    Spark's default cache of 100 classes every batch recompiled ~50."""
+    import hashlib
+
+    from sems_event_deduplication_spark.operators.incremental import (
+        append_to_index, load_index,
+    )
+    from sems_event_deduplication_spark.operators.strategies import (
+        release_gated_broadcasts,
+    )
+    wh = _index_wh(spark, cfg, "codegen")
+    base = [r["transcript_norm"] for r in wh.load("signatures").collect()]
+    compiled = []
+    for b in range(3):
+        batch = spark.createDataFrame(pd.DataFrame({
+            "clip_id": [f"c{b}_exact", f"c{b}_near"]
+            + [f"c{b}_new{i}" for i in range(4)],
+            "transcript": [base[b], base[b + 1] + " again"] + [
+                "novel clip " + hashlib.sha256(f"{b}/{i}".encode()).hexdigest()
+                for i in range(4)
+            ],
+        }))
+        before = codegen_compiled()
+        out = incremental_dedup(batch, load_index(wh), cfg)
+        wh.save(
+            out["exact_hits"].withColumn("jaccard", F.lit(1.0)).unionByName(
+                out["neardup_hits"].select("id_new", "id_indexed", "jaccard")
+            ),
+            f"hits_{b}",
+        )
+        append_to_index(out["novel"], wh, f"c{b}")
+        compiled.append(codegen_compiled() - before)
+        release_gated_broadcasts()
+        hits = {r["id_new"] for r in wh.load(f"hits_{b}").collect()}
+        assert hits == {f"c{b}_exact", f"c{b}_near"}
+    assert compiled[2] <= 10, compiled

@@ -93,3 +93,35 @@ def test_per_layer_metrics_get_medians_and_wins_but_no_verdict():
         "audio_batch audio.sign_s [lower, per layer]: "
         "base 1.1 (1.05-1.15) | change 1 (0.95-1.15) | wins 2/3"
     )
+
+
+def _clips_pairs(base, change):
+    return {
+        "base": [_result(c, 1.0) for c in base],
+        "change": [_result(c, 1.0) for c in change],
+    }
+
+
+def test_gain_shown_needs_nine_of_ten_wins_and_a_gap_above_base_iqr():
+    base = [100, 101, 102, 103, 104, 105, 106, 107, 108, 109]
+    # 9/10 wins (the last pair loses), median gap 10 above a base IQR
+    # of 4.5: shown
+    nine = [c + 12 for c in base[:9]] + [100]
+    clips = bench_extra.summarize_pairs(_clips_pairs(base, nine), E2E[:1])[0]
+    assert clips["wins"] == 9 and clips["gap_exceeds_base_iqr"]
+    assert clips["gain_shown"]
+    line = bench_extra.format_pair_rows("audio_batch", [clips])[0]
+    assert "| gain shown: yes |" in line
+    # 8/10 wins with the same large gap: not shown
+    eight = [c + 12 for c in base[:8]] + [100, 100]
+    clips = bench_extra.summarize_pairs(_clips_pairs(base, eight), E2E[:1])[0]
+    assert clips["wins"] == 8 and clips["gap_exceeds_base_iqr"]
+    assert not clips["gain_shown"]
+    # 10/10 wins by 1, inside the base IQR: not shown
+    ten = [c + 1 for c in base]
+    clips = bench_extra.summarize_pairs(_clips_pairs(base, ten), E2E[:1])[0]
+    assert clips["wins"] == 10 and not clips["gap_exceeds_base_iqr"]
+    assert not clips["gain_shown"]
+    assert "| gain shown: no |" in bench_extra.format_pair_rows(
+        "audio_batch", [clips]
+    )[0]

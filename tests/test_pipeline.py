@@ -780,6 +780,23 @@ def test_min_mode_job_budget(spark, corpus, count_jobs):
     assert min(rows.values()) > 0, rows
 
 
+def test_warm_rerun_compiles_no_classes(spark, corpus, codegen_compiled):
+    """The codegen cache holds a run's generated classes, so a second
+    default run of the same corpus (fresh warehouse) compiles none, and
+    the run reports that count. With Spark's default cache of 100
+    classes each run evicted its own ~128 and the rerun recompiled 119."""
+    def run():
+        wh = WarehouseIO(spark, tempfile.mkdtemp(prefix="wh_codegen_"))
+        return DedupPipeline(spark, CFG, wh).run(corpus)
+
+    run()
+    before = codegen_compiled()
+    res = run()
+    assert codegen_compiled() - before == 0
+    assert res.codegen_classes_compiled == 0
+    assert res.metrics_dict()["codegen"] == {"classes_compiled": 0}
+
+
 def test_checkpoint_mode_all_rejected(spark, corpus):
     """The staged layout is gone; asking for it fails loudly."""
     pipe = DedupPipeline(spark, CFG, WarehouseIO(spark, tempfile.mkdtemp()))

@@ -1,4 +1,4 @@
-"""Session factory defaults that do not need a SparkSession."""
+"""Session factory defaults."""
 
 from __future__ import annotations
 
@@ -38,3 +38,9 @@ def test_driver_memory_without_sysconf(monkeypatch):
     monkeypatch.setattr(os, "sysconf", unsupported)
     monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
     assert driver_memory() == "24g"
+
+
+def test_codegen_cache_holds_the_engine_working_set(spark):
+    """The session's generated-code cache is sized above a pipeline
+    run's ~132 classes (Spark's default keeps 100)."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
