@@ -488,8 +488,9 @@ def test_ingest_loop_codegen_cache_holds_a_batch(spark, cfg, codegen_compiled):
     """An ingest loop repeats the same plans batch after batch, so once
     the codegen cache holds them a batch compiles (almost) no classes:
     after two warm batches of load_index -> incremental_dedup -> save
-    the hits -> append_to_index, a third compiles at most 10. With
-    Spark's default cache of 100 classes every batch recompiled ~50."""
+    the hits -> append_to_index, a third compiles at most 10 (0 here).
+    With Spark's default cache of 100 classes the third batch
+    recompiled 32."""
     import hashlib
 
     from sems_event_deduplication_spark.operators.incremental import (

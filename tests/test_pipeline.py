@@ -784,7 +784,8 @@ def test_warm_rerun_compiles_no_classes(spark, corpus, codegen_compiled):
     """The codegen cache holds a run's generated classes, so a second
     default run of the same corpus (fresh warehouse) compiles none, and
     the run reports that count. With Spark's default cache of 100
-    classes each run evicted its own ~128 and the rerun recompiled 119."""
+    classes each run evicted its own ~128 and the rerun recompiled
+    98-119 of them."""
     def run():
         wh = WarehouseIO(spark, tempfile.mkdtemp(prefix="wh_codegen_"))
         return DedupPipeline(spark, CFG, wh).run(corpus)
