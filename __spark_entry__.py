@@ -81,9 +81,7 @@ def entry(spark: SparkSession) -> DataFrame:
     cluster summary. (SURVEY.md §3.1 lifecycle, text path.)
     """
     from sems_event_deduplication_spark.conf import DedupConfig
-    from sems_event_deduplication_spark.functions.minhash import (
-        band_hashes, make_minhash_udf, shingle_hashes,
-    )
+    from sems_event_deduplication_spark.functions.minhash import with_text_signatures
     from sems_event_deduplication_spark.operators.components import (
         assign_components, connected_components,
     )
@@ -97,17 +95,12 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("doc_id").cast("string").alias("clip_id"),
         normalize_text(F.col("text"), strip_boilerplate=False).alias("transcript_norm"),
     )
-    mh = make_minhash_udf(cfg.num_perm, cfg.seed)
-    sigs = (
-        docs.withColumn("shingles", char_shingles(F.col("transcript_norm"), cfg.shingle_k))
-        .withColumn("shingle_hashes", shingle_hashes(F.col("shingles")))
-        .withColumn("minhash_sig", mh(F.col("shingle_hashes")))
-        .withColumn("bands", band_hashes(F.col("minhash_sig"), cfg.bands, cfg.rows_per_band))
-        # verify runs on the int64 shingle hashes (the pipeline's own
-        # shape — plans/pipeline.py:397): Jaccard is identical modulo
-        # xxhash64 collisions (~2^-64/pair), and neither the persisted
-        # frame nor the two-side verify join carries the string arrays
-        .select("clip_id", "shingle_hashes", "minhash_sig", "bands")
+    # the pipeline's text signatures; verify runs on the int64 shingle
+    # hashes: Jaccard is identical modulo xxhash64 collisions
+    # (~2^-64/pair), and neither the persisted frame nor the two-side
+    # verify join carries the string arrays
+    sigs = with_text_signatures(docs, cfg).select(
+        "clip_id", "shingle_hashes", "minhash_sig", "bands"
     )
     sigs = sigs.persist()  # reused by candidates, both verify sides, assign
     cands = candidate_pairs(explode_bands(sigs, "clip_id", "bands"), cfg.max_bucket_size)

@@ -25,9 +25,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..conf import DedupConfig
+from . import text as X
 
 _MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 _EMPTY_SENTINEL = np.uint64(0x9E3779B97F4A7C15)  # signature slot for empty docs
@@ -95,6 +98,25 @@ def band_hashes(sig: Column, bands: int, rows_per_band: int) -> Column:
     r = rows_per_band
     return F.array(
         *[F.xxhash64(F.lit(i), F.slice(sig, i * r + 1, r)) for i in range(bands)]
+    )
+
+
+def with_text_signatures(df: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Add ``shingle_hashes``, ``minhash_sig`` and ``bands`` to a frame
+    with ``transcript_norm``: the one definition of a text signature,
+    shared by the pipeline's signatures stage and
+    ``incremental.sign_batch``, so index and batch signatures always
+    compare."""
+    mh = make_minhash_udf(cfg.num_perm, cfg.seed)
+    return (
+        df.withColumn(
+            "shingle_hashes",
+            shingle_hashes(X.char_shingles(F.col("transcript_norm"), cfg.shingle_k)),
+        )
+        .withColumn("minhash_sig", mh(F.col("shingle_hashes")))
+        .withColumn(
+            "bands", band_hashes(F.col("minhash_sig"), cfg.bands, cfg.rows_per_band)
+        )
     )
 
 

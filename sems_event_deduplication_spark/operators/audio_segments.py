@@ -50,67 +50,45 @@ def verify_segment_overlap(
     pairs: DataFrame,
     sigs: DataFrame,
     containment_threshold: float,
+    mode: str = "exact",
 ) -> DataFrame:
-    """Candidates -> (id_a, id_b, containment >= t).
-
-    Exact set overlap on the int64 landmark arrays, min-size
+    """Candidates -> (id_a, id_b, containment >= t), min-size
     denominator (containment, not Jaccard — a 5 s clip inside a 60 s
-    host has tiny Jaccard but containment ~1).
+    host has tiny Jaccard but containment ~1). ``mode`` picks only the
+    side column and the numerator:
+
+    - ``"exact"``: the ``array_intersect`` size of the two ``landmarks``
+      arrays — exact even where shared landmarks hit the star cap, but
+      both arrays (~10³-10⁴ int64 each, the largest column after the
+      payload) ride the pair join.
+    - ``"count"``: the scale form — the candidate join's own
+      co-occurrence count ``n_shared_bands`` over a narrow per-clip
+      ``n_lm``; no array leaves the signature table. Landmarks are
+      DISTINCT per clip (``np.unique`` in ``landmarks_from_mag``) and
+      the inverted index maps each to its holders once, so where every
+      shared landmark sits in an uncapped bucket the count IS
+      ``|A ∩ B|`` (bit-identical, property-tested). Star-capped
+      buckets are not enumerated, so there the count is a LOWER bound:
+      it can only suppress pairs (surfaced by the landmark stats'
+      ``n_pairs_not_enumerated``), never admit wrong ones.
     """
     from .verify import attach_pair_sides
 
-    sides = sigs.select("clip_id", "landmarks")
-    joined = attach_pair_sides(pairs, sides, ["landmarks"])
-    inter = F.size(F.array_intersect(F.col("landmarks_a"), F.col("landmarks_b")))
-    denom = F.least(F.size("landmarks_a"), F.size("landmarks_b"))
+    if mode == "exact":
+        side, sides = "landmarks", sigs.select("clip_id", "landmarks")
+        inter = F.size(F.array_intersect(F.col("landmarks_a"), F.col("landmarks_b")))
+        denom = F.least(F.size("landmarks_a"), F.size("landmarks_b"))
+    elif mode == "count":
+        side, sides = "n_lm", sigs.select("clip_id", F.size("landmarks").alias("n_lm"))
+        pairs = pairs.select("id_a", "id_b", "n_shared_bands")
+        inter, denom = F.col("n_shared_bands"), F.least("n_lm_a", "n_lm_b")
+    else:
+        raise ValueError(f"unknown offset verify_mode: {mode!r}")
+    joined = attach_pair_sides(pairs, sides, [side])
     return (
         joined.withColumn(
             "containment",
             F.when(denom > 0, inter / denom).otherwise(F.lit(0.0)),
-        )
-        .filter(F.col("containment") >= F.lit(containment_threshold))
-        .select("id_a", "id_b", "containment")
-    )
-
-
-def verify_segment_overlap_counts(
-    pairs: DataFrame,
-    sigs: DataFrame,
-    containment_threshold: float,
-) -> DataFrame:
-    """The scale form of ``verify_segment_overlap``: containment from
-    the candidate join's own co-occurrence count instead of an exact
-    array intersect.
-
-    Landmarks are DISTINCT per clip (``np.unique`` in
-    ``landmarks_from_mag``) and the inverted index maps each landmark
-    to its holders once, so for a pair whose shared landmarks all live
-    in uncapped buckets ``n_shared_bands`` (from ``lsh.candidate_pairs``)
-    IS ``|A ∩ B|`` — the count mode is then bit-identical to the exact
-    mode (property-tested). Shared landmarks in star-capped buckets are
-    not enumerated, so the count is a LOWER bound there: containment is
-    underestimated, which can only suppress pairs (false negatives,
-    surfaced by the pipeline's ``n_pairs_not_enumerated`` landmark
-    stats), never admit wrong ones.
-
-    Why it exists: the exact mode ships both clips' full landmark
-    arrays (~10³-10⁴ int64 each) through the pair join — at corpus
-    scale the arrays are the largest column after the payload itself,
-    and re-shuffling them per candidate pair is the offset tier's
-    dominant cost. This mode joins only ``(clip_id, n_landmarks)`` —
-    two narrow int joins, no array ever leaves the signature table.
-    """
-    counts = sigs.select("clip_id", F.size("landmarks").alias("n_lm"))
-    from .verify import attach_pair_sides
-
-    joined = attach_pair_sides(
-        pairs.select("id_a", "id_b", "n_shared_bands"), counts, ["n_lm"]
-    )
-    denom = F.least("n_lm_a", "n_lm_b")
-    return (
-        joined.withColumn(
-            "containment",
-            F.when(denom > 0, F.col("n_shared_bands") / denom).otherwise(F.lit(0.0)),
         )
         .filter(F.col("containment") >= F.lit(containment_threshold))
         .select("id_a", "id_b", "containment")
@@ -152,18 +130,8 @@ def audio_offset_pairs_from_sigs(
     with a ``lsh.bucket_stats`` observability pass (the pipeline does;
     stop-landmark recall loss must be visible, not inferred).
 
-    ``verify_mode`` (same selectable-strategy shape as
-    ``interval_merge_edges`` / ``stratified_cluster_split``):
-
-    - ``"exact"`` (default): array-intersect overlap on the full
-      landmark arrays — exact containment even for pairs whose shared
-      landmarks hit the star cap, at the cost of shipping the arrays
-      through the pair join.
-    - ``"count"``: the scale form — containment from the candidate
-      join's co-occurrence count + a narrow per-clip landmark count
-      (``verify_segment_overlap_counts``); bit-identical absent star
-      caps, lower-bound (never over-admitting) under them, and no
-      landmark array ever rides the pair shuffle.
+    ``verify_mode`` is ``verify_segment_overlap``'s ``mode``:
+    ``"exact"`` (default) or ``"count"``, the scale form.
     """
     inverted = (
         sized_inverted
@@ -173,11 +141,7 @@ def audio_offset_pairs_from_sigs(
     cands = lsh.candidate_pairs(inverted, cfg.max_bucket_size).filter(
         F.col("n_shared_bands") >= min_shared_landmarks
     )
-    if verify_mode == "count":
-        return verify_segment_overlap_counts(cands, sigs, containment_threshold)
-    if verify_mode != "exact":
-        raise ValueError(f"unknown offset verify_mode: {verify_mode!r}")
-    return verify_segment_overlap(cands, sigs, containment_threshold)
+    return verify_segment_overlap(cands, sigs, containment_threshold, verify_mode)
 
 
 def audio_offset_pairs(

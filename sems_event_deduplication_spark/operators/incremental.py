@@ -7,8 +7,8 @@ signed and clustered, and each new batch must be deduped **against**
 it without re-clustering the world. This operator family is that path:
 
 - ``sign_batch``      — compute the same signatures the pipeline
-  persists (reuses the exact pipeline expressions, so index and batch
-  signatures are always comparable).
+  persists (``minhash.with_text_signatures`` is the one definition
+  both call, so index and batch signatures are always comparable).
 - ``batch_vs_index_candidates`` — banded equi-join of the new batch's
   bands against the index's bands (NOT a self-join: candidates are
   (new, indexed) only; intra-batch dups are the ordinary self-join on
@@ -53,9 +53,10 @@ def sign_batch(batch: DataFrame, cfg: DedupConfig, id_col: str = "clip_id",
                text_col: str = "transcript",
                payload_col: str | None = None) -> DataFrame:
     """(id, transcript[, payload]) -> (id, transcript_norm, digest key
-    columns, shingle_hashes, minhash_sig, bands) — identical
-    expressions to the pipeline's signatures stage, so batch and index
-    signatures are comparable.
+    columns, shingle_hashes, minhash_sig, bands). The signature columns
+    come from ``minhash.with_text_signatures``, the same function the
+    pipeline's signatures stage calls, so batch and index signatures
+    are comparable.
 
     The exact-tier keys come from ``exact_dedup_digest_keys`` —
     ONE definition of "exact" shared with the pipeline
@@ -65,25 +66,16 @@ def sign_batch(batch: DataFrame, cfg: DedupConfig, id_col: str = "clip_id",
     (same transcript over different audio is NOT content-identical);
     text-only callers get text-only keys — see ``incremental_dedup``
     for the semantic consequences of each choice."""
-    mh = M.make_minhash_udf(cfg.num_perm, cfg.seed)
     norm = X.normalize_text(F.col(text_col))
     _, digests = exact_dedup_digest_keys(
         "transcript_norm", payload_col, cfg.exact_digest_algo
     )
     keep = [F.col(payload_col)] if payload_col is not None else []
-    return (
+    return M.with_text_signatures(
         batch.select(
             F.col(id_col).alias("clip_id"), norm.alias("transcript_norm"), *keep
-        )
-        .select("clip_id", "transcript_norm", *digests)
-        .withColumn(
-            "shingle_hashes",
-            M.shingle_hashes(X.char_shingles(F.col("transcript_norm"), cfg.shingle_k)),
-        )
-        .withColumn("minhash_sig", mh(F.col("shingle_hashes")))
-        .withColumn(
-            "bands", M.band_hashes(F.col("minhash_sig"), cfg.bands, cfg.rows_per_band)
-        )
+        ).select("clip_id", "transcript_norm", *digests),
+        cfg,
     )
 
 

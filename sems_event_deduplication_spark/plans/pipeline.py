@@ -16,8 +16,11 @@
       -> connected components (star/star)        [stage: components]
       -> clusters + survivors + metrics          [stages: clusters, survivors]
 
-(``signature_scan_mode="dedup_first"`` commits ``exact_edges`` first and
-fingerprints only the keepers.) The six committed stages checkpoint
+``signature_scan_mode`` only orders the exact_edges and signatures
+stages: ``fused`` (above) commits signatures first and ranks their
+digest columns; ``dedup_first`` commits ``exact_edges`` first and
+fingerprints only the keepers. Both run the same two stage functions
+and everything after them is shared. The six committed stages checkpoint
 through WarehouseIO (resume = skip committed stages, the reference's
 exists-check pattern at ``create_silver_label.py:224``); everything
 between them stays lazy and fuses into the next committed stage. The binary
@@ -40,6 +43,9 @@ from ..functions import minhash as M
 from ..functions import text as X
 from ..operators import lsh, verify
 from ..operators.components import assign_components, connected_components
+from ..operators.exact_dedup import (
+    digest_rank_edges, exact_dedup_digest_keys, kept_from_edges,
+)
 from ..operators.survivors import cluster_summary, select_survivors
 from ..sources.warehouse import WarehouseIO
 
@@ -195,7 +201,12 @@ class DedupPipeline:
         checkpoint_mode: str = "min",
         payload_in_survivors: bool = True,
     ) -> PipelineResult:
-        """Verification is one pass: the candidate pairs of every tier
+        """One stage sequence for both scan modes:
+        ``cfg.signature_scan_mode`` only decides whether the exact_edges
+        stage runs before the signatures stage (``dedup_first``) or
+        after it (``fused``).
+
+        Verification is one pass: the candidate pairs of every tier
         are grouped once with a flag per tier, the sides are attached
         once, and each tier's rule runs where its flag is set
         (``verify.tier_flags`` + ``verify.verify_flagged``).
@@ -235,19 +246,24 @@ class DedupPipeline:
         )
 
         offset_tier = with_audio and cfg.with_offset_audio
-        fused_scan = cfg.signature_scan_mode == "fused"
         cores = self.spark.sparkContext.defaultParallelism
+        # spread the Arrow-UDF work across every core — but only shuffle
+        # when the scan is genuinely under-partitioned (a single-file
+        # table or a tiny checkpoint read-back); a wide parquet scan is
+        # already parallel, and repartitioning it would push the whole
+        # binary payload through a shuffle for nothing. The session sets
+        # spark.sql.files.maxPartitionBytes=64m so payload scans split
+        # finely enough to keep every core busy without that shuffle.
+        spread = _estimated_scan_partitions(normalized) < cores
+        keys, digests = exact_dedup_digest_keys(
+            "transcript_norm", "bytes" if with_audio else None,
+            cfg.exact_digest_algo,
+        )
 
         def add_signature_columns(df: DataFrame) -> DataFrame:
             """Every fingerprint in one select; the Arrow UDFs fuse into
             a single ArrowEvalPython over one payload read."""
-            out = df.withColumn(
-                "shingles", X.char_shingles(F.col("transcript_norm"), cfg.shingle_k)
-            ).withColumn("shingle_hashes", M.shingle_hashes(F.col("shingles")))
-            mh = M.make_minhash_udf(cfg.num_perm, cfg.seed)
-            out = out.withColumn("minhash_sig", mh(F.col("shingle_hashes"))).withColumn(
-                "bands", M.band_hashes(F.col("minhash_sig"), cfg.bands, cfg.rows_per_band)
-            )
+            out = M.with_text_signatures(df, cfg)
             if offset_tier:
                 # fuse the offset-tier landmark extraction into the SAME
                 # payload pass as the SimHash: one decode feeds both
@@ -264,18 +280,15 @@ class DedupPipeline:
                     "*",
                     F.col("__audio.audio_simhash").alias("audio_simhash"),
                     F.col("__audio.landmarks").alias("landmarks"),
-                ).withColumn(
-                    "audio_bands",
-                    A.simhash_bands(F.col("audio_simhash"), cfg.simhash_bands, cfg.simhash_bits),
                 )
             elif with_audio:
                 ash = A.make_audio_simhash_udf(
                     cfg.fft_frame, cfg.fft_hop, cfg.n_mel_bands, cfg.simhash_bits,
                     cfg.seed, floor_db=cfg.fp_floor_db,
                 )
+                out = out.withColumn("audio_simhash", ash(F.col("bytes"), F.col("codec")))
+            if with_audio:
                 out = out.withColumn(
-                    "audio_simhash", ash(F.col("bytes"), F.col("codec"))
-                ).withColumn(
                     "audio_bands",
                     A.simhash_bands(F.col("audio_simhash"), cfg.simhash_bands, cfg.simhash_bits),
                 )
@@ -287,91 +300,53 @@ class DedupPipeline:
         if offset_tier:
             sig_cols += ["landmarks"]
 
-        if fused_scan:
-            # ---- ONE payload pass: digests + every signature -------------
-            # Exact dedup then ranks the narrow digest projection of the
-            # checkpointed signature table, and keepers are selected by a
-            # broadcast anti-join against the (small) dropped-id set — the
-            # payload is read exactly once end-to-end. Tradeoff vs
-            # dedup_first: fingerprints are computed for rows exact dedup
-            # will drop, so prefer dedup_first when the dup rate is high
-            # and fused when payload I/O dominates (the 100 TB shape).
-            from ..operators.exact_dedup import (
-                digest_rank_edges, exact_dedup_digest_keys, kept_from_edges,
-            )
-
-            src = normalized
-            if _estimated_scan_partitions(normalized) < cores:
-                src = src.repartition(cores * 2)
-            keys, digests = exact_dedup_digest_keys(
-                "transcript_norm", "bytes" if with_audio else None,
-                cfg.exact_digest_algo,
-            )
-            enriched = src.select("*", *digests)
-            # the longest stage of a real run: cfg.signature_chunks > 0
-            # commits it in chunks, so a killed job does not recompute
-            # hours of fingerprints
-            sigs_all = stage(
-                add_signature_columns(enriched).select(*sig_cols, *keys),
+        def signature_stage(df: DataFrame, cols: list[str]) -> DataFrame:
+            """Commit ``cols`` of ``df`` plus every fingerprint — the
+            longest stage of a real run: cfg.signature_chunks > 0 commits
+            it in chunks, so a killed job does not recompute hours of
+            fingerprints. The digests it adds survive only where ``cols``
+            names them."""
+            if spread:
+                df = df.repartition(cores * 2)
+            return stage(
+                add_signature_columns(df.select("*", *digests)).select(*cols),
                 "signatures", cfg.signature_chunks,
             )
 
-            exact_edges = stage(
-                digest_rank_edges(sigs_all.select("clip_id", *keys), keys),
-                "exact_edges",
+        def exact_stage(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+            """Commit keep-last edges ranked over ``df``'s digest columns
+            (a narrow projection: the payload never rides the digest
+            shuffle) and return ``(edges, keepers)``. The write's own row
+            count decides whether the keeper anti-join broadcasts the
+            dropped ids (a resumed stage has none, so the gate counts
+            the committed table)."""
+            edges = stage(
+                digest_rank_edges(df.select("clip_id", *keys), keys), "exact_edges"
             )
-            # driver-safety gate shared with the dedup_first path: above
-            # the cap the anti-join runs without a broadcast hint instead
-            # of force-broadcasting an arbitrarily large dropped-id set.
-            # The write's own row count decides it (a resumed stage has
-            # none, and the gate counts the committed table instead)
-            sigs = kept_from_edges(
-                sigs_all, exact_edges, "clip_id",
+            keepers = kept_from_edges(
+                df, edges, "clip_id",
                 cfg.exact_dedup_strategy, cfg.exact_dedup_max_broadcast_ids,
                 self.wh.rows_written("exact_edges"),
             ).drop(*keys)
+            return edges, keepers
+
+        # The scan mode only orders these two stages. fused: ONE payload
+        # pass computes digests and every signature, and exact dedup
+        # ranks the digest columns of the committed signatures table —
+        # the payload is read exactly once, but rows exact dedup drops
+        # are fingerprinted too (the 100 TB shape, where payload I/O
+        # dominates). dedup_first (the reference's ordering): exact
+        # dedup runs on the corpus first and only keepers are
+        # fingerprinted, which wins when the dup rate is high.
+        # `all_rows` holds every input row's (clip_id, transcript_norm)
+        # for the component assignment below.
+        if cfg.signature_scan_mode == "fused":
+            all_rows = signature_stage(normalized, sig_cols + keys)
+            exact_edges, sigs = exact_stage(all_rows)
         else:
-            # ---- exact dedup on content digests (reference ordering) -----
-            # The edge list is staged STRAIGHT to the warehouse — one
-            # digest scan total, timed as the exact_edges stage — and
-            # keepers derive from the committed table (kept_from_edges,
-            # same strategy gate as the fused path). On resume the stage
-            # loads the committed table, so the digest scan never re-runs.
-            from ..operators.exact_dedup import (
-                digest_rank_edges, exact_dedup_digest_keys, kept_from_edges,
-            )
-
-            key_names, digests = exact_dedup_digest_keys(
-                "transcript_norm", "bytes" if with_audio else None,
-                cfg.exact_digest_algo,
-            )
-            exact_edges = stage(
-                digest_rank_edges(
-                    normalized.select("clip_id", *digests), key_names
-                ),
-                "exact_edges",
-            )
-            exact = kept_from_edges(
-                normalized, exact_edges, "clip_id",
-                cfg.exact_dedup_strategy, cfg.exact_dedup_max_broadcast_ids,
-                self.wh.rows_written("exact_edges"),
-            )
-
-            # ---- signatures (payload dropped after this stage) -----------
-            # spread the Arrow-UDF work across every core — but only
-            # shuffle when the scan is genuinely under-partitioned (a
-            # single-file table or a tiny checkpoint read-back); a wide
-            # parquet scan is already parallel, and repartitioning it
-            # would push the whole binary payload through a shuffle for
-            # nothing. The session sets spark.sql.files.maxPartitionBytes
-            # =64m so payload scans split finely enough to keep every
-            # core busy without that shuffle.
-            if _estimated_scan_partitions(normalized) < cores:
-                exact = exact.repartition(cores * 2)
-            sigs = stage(
-                add_signature_columns(exact).select(*sig_cols),
-                "signatures", cfg.signature_chunks,
-            )
+            all_rows = normalized
+            exact_edges, keepers = exact_stage(normalized.select("*", *digests))
+            sigs = signature_stage(keepers, sig_cols)
 
         # ---- LSH candidates ------------------------------------------------
         # The band-bucket exchange (explode -> window on (band_id,
@@ -489,12 +464,9 @@ class DedupPipeline:
         # point). dedup_first commits only keeper rows, so that path
         # keeps reading `normalized` (dropped rows must still appear in
         # the final clusters).
-        assign_nodes = (
-            sigs_all.select("clip_id", "transcript_norm")
-            if fused_scan
-            else normalized.select("clip_id", "transcript_norm")
+        clustered = assign_components(
+            all_rows.select("clip_id", "transcript_norm"), comp
         )
-        clustered = assign_components(assign_nodes, comp)
         # always materialize: both the survivors and the clusters outputs
         # consume this (lazy it would run the assign join twice), and the
         # component assignment is the natural resume point after the CC loop
@@ -528,17 +500,3 @@ class DedupPipeline:
             exact_digest_algo=cfg.exact_digest_algo,
             codegen_classes_compiled=_compiled_classes(self.spark) - compiled_before,
         )
-
-    def throughput(self, result: PipelineResult, n_clips: int) -> dict:
-        """Throughput over the run's true wall time. Summing per-stage
-        seconds would double-count the overlapped survivors/clusters
-        commits (two driver threads) and so UNDERSTATE clips/sec; the
-        per-stage numbers remain available under ``stages`` for
-        attribution."""
-        total = result.wall_sec or sum(m.seconds for m in result.metrics)
-        return {
-            "n_clips": n_clips,
-            "total_sec": round(total, 3),
-            "clips_per_sec": round(n_clips / total, 2) if total > 0 else None,
-            "stages": result.metrics_dict(),
-        }

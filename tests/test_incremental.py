@@ -98,6 +98,31 @@ def test_exact_tier_shares_pipeline_digest_keys(spark, cfg):
     assert set(keys) <= set(signed.columns), (keys, signed.columns)
 
 
+def test_pipeline_and_sign_batch_sign_alike(spark, corpus, cfg, tmp_path):
+    """The ingest path signs a clip exactly as the pipeline does: the
+    committed signatures table of a fused text-only run equals
+    ``sign_batch`` over the same clips in every signature column and
+    in the text digest keys, so a batch can be matched against an
+    index the pipeline built."""
+    from sems_event_deduplication_spark.operators.exact_dedup import (
+        exact_dedup_digest_keys,
+    )
+    from sems_event_deduplication_spark.plans.pipeline import DedupPipeline
+    from sems_event_deduplication_spark.sources.warehouse import WarehouseIO
+
+    wh = WarehouseIO(spark, str(tmp_path / "wh"))
+    DedupPipeline(spark, cfg, wh).run(corpus, with_audio=False)
+    keys, _ = exact_dedup_digest_keys("transcript_norm", None, cfg.exact_digest_algo)
+    cols = ["clip_id", "transcript_norm", "shingle_hashes", "minhash_sig", "bands", *keys]
+
+    def rows(df):
+        return {r["clip_id"]: tuple(r) for r in df.select(*cols).collect()}
+
+    piped = rows(wh.load_clean("signatures"))
+    assert len(piped) == corpus.count()
+    assert piped == rows(sign_batch(corpus, cfg))
+
+
 def test_payload_keys_same_transcript_different_audio(spark):
     """Flagship semantics (payload_col given): a batch clip with an
     identical transcript but different audio is NOT an exact hit — it

@@ -765,19 +765,22 @@ def test_min_mode_job_budget(spark, corpus, count_jobs):
     count and one ungrouped bucket-stats aggregate keep a run of the
     test corpus at 21 Spark jobs (38 with a verify pass per tier and an
     inferring read-back per stage, 24 with a gate count job and a
-    grouped stats collect). Each committed stage's rows_out, read from
-    an Observation on its write rather than a count job, equals its
-    table's rows."""
+    grouped stats collect). The dedup_first scan mode runs the same
+    stages in the other order at 20 jobs. Each committed stage's
+    rows_out, read from an Observation on its write rather than a count
+    job, equals its table's rows."""
     corpus.count()  # the cached corpus materializes outside the count
-    wh = WarehouseIO(spark, tempfile.mkdtemp(prefix="wh_jobs_"))
-    runs = []
-    n = count_jobs(lambda: runs.append(
-        DedupPipeline(spark, CFG, wh).run(corpus, with_audio=True)
-    ))
-    assert n <= 21, n
-    rows = _written_rows(runs[0])
-    assert rows == {name: wh.load_clean(name).count() for name in COMMITTED}
-    assert min(rows.values()) > 0, rows
+    for mode, budget in (("fused", 21), ("dedup_first", 20)):
+        cfg = DedupConfig(signature_scan_mode=mode)
+        wh = WarehouseIO(spark, tempfile.mkdtemp(prefix="wh_jobs_"))
+        runs = []
+        n = count_jobs(lambda: runs.append(
+            DedupPipeline(spark, cfg, wh).run(corpus, with_audio=True)
+        ))
+        assert n <= budget, (mode, n)
+        rows = _written_rows(runs[0])
+        assert rows == {name: wh.load_clean(name).count() for name in COMMITTED}
+        assert min(rows.values()) > 0, (mode, rows)
 
 
 def test_warm_rerun_compiles_no_classes(spark, corpus, codegen_compiled):
